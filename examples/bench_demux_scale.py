@@ -13,6 +13,8 @@ C. The same dedup-key A/B on document-scale (~330 B) lines, cold and
    warm — where the digest key wins ~2x.
 D. exactly_once batch-dir layout vs flat+dedup_replays at 100x:
    batch write, worst-case full replay, and finalize cost.
+E. Schema-stable ``_schema.json`` write skip: steady-state batches on
+   the wide corpus with the fast path on vs forced off.
 
 Run:  python examples/bench_demux_scale.py
 Prints one human-readable block; numbers land in BASELINE.md.
@@ -238,29 +240,6 @@ def main() -> None:
             times.append(time.monotonic() - t0)
         print(
             f"E {label}: tables={n_tables} "
-            f"steady per-batch={sum(times) / 3:.2f}s "
-            f"({sum(times) / 3 / n_tables * 1000:.0f} ms/table) "
-            f"batches={[round(t, 2) for t in times]}"
-        )
-
-    # ---- F. single-job write layout A/B (r10) ----------------------------
-    # ONE partitionBy(__table__) write per batch vs one job per table,
-    # same wide corpus, warm steady state, exactly_once both sides.
-    for layout in ("per_table", "single_job"):
-        base = os.path.join(work, f"f_{layout}")
-        demux = JsonStreamDemux(
-            base, "root", key_cols=None, exactly_once=True,
-            write_layout=layout,
-        )
-        demux.process_batch(batch, 0)  # discovery
-        times = []
-        for bi in range(3):
-            t0 = time.monotonic()
-            demux.process_batch(batch, 100 + bi)
-            times.append(time.monotonic() - t0)
-        n_tables = len(demux.schemas)
-        print(
-            f"F {layout}: tables={n_tables} "
             f"steady per-batch={sum(times) / 3:.2f}s "
             f"({sum(times) / 3 / n_tables * 1000:.0f} ms/table) "
             f"batches={[round(t, 2) for t in times]}"

@@ -1058,8 +1058,8 @@ def tfidf_pairs(
     result-identical output (the decision arithmetic is all
     BIGINT/DECIMAL on the same lattice as the dot products; see the
     inline proof), with the ``max_df``² fanout cap still the backstop. MEASURED
-    NEGATIVE on the driver corpus and shipped opt-in, the single_job
-    precedent: this corpus's df distribution is cap-dominated (at
+    NEGATIVE on the driver corpus and shipped opt-in: this corpus's
+    df distribution is cap-dominated (at
     sf0.1 only 250 postings survive 2 <= df <= 1000 — the token
     tagging makes most terms df=1 and real words df >> 1000), the
     τ=0.8 suffix bound then prunes zero of them, and the two-stage

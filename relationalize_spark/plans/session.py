@@ -10,6 +10,8 @@ initial tasks.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -69,3 +71,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the scope of a ``with`` block, then put
+    back what was there before, on success and on exception alike. A
+    key that was not set explicitly is unset again, so it falls back
+    to its default instead of being pinned to it."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -5200,10 +5200,14 @@ def q130_stream_demux_dynamic(spark: SparkSession, sf: str) -> DataFrame:
     part = os.path.join(work, "w")
     ldf.repartition(4, "b").write.mode("overwrite").partitionBy("b").text(part)
     for i in range(4):
-        shutil.move(
-            glob.glob(os.path.join(part, f"b={i}", "part-*"))[0],
-            os.path.join(src, f"b{i}.txt"),
-        )
+        found = glob.glob(os.path.join(part, f"b={i}", "part-*"))
+        if not found:
+            # partitionBy makes no directory for an absent value
+            raise RuntimeError(
+                f"q130: no batch file under {os.path.join(part, f'b={i}')}: "
+                f"no orders row has o_orderkey % 4 == {i}"
+            )
+        shutil.move(found[0], os.path.join(src, f"b{i}.txt"))
 
     # flat at-least-once layout on purpose: q130 attests the replay
     # + finalize(dedup_replays) recovery lane; the exactly_once
@@ -7210,8 +7214,13 @@ _R12_WINDOW = [
     "q100_column_profile",
     "q102_session_window_batch",
 ]
-assert len(_R12_WINDOW) == 50 and len(set(_R12_WINDOW)) == 50
-assert all(n in REGISTRY for n in _R12_WINDOW)
+if len(_R12_WINDOW) != 50 or len(set(_R12_WINDOW)) != 50:
+    raise RuntimeError(
+        f"_R12_WINDOW must name 50 distinct queries, got {len(_R12_WINDOW)} "
+        f"entries ({len(set(_R12_WINDOW))} distinct)"
+    )
+if missing := [n for n in _R12_WINDOW if n not in REGISTRY]:
+    raise RuntimeError(f"_R12_WINDOW names unregistered queries: {missing}")
 REGISTRY = {n: REGISTRY[n] for n in _R12_WINDOW} | {
     n: v for n, v in REGISTRY.items() if n not in set(_R12_WINDOW)
 }

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.session import session_conf
+
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Initial full write in Hive partition layout (dir-per-value)."""
@@ -34,13 +36,10 @@ def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) ->
     """Replace ONLY the partitions present in ``df``; all other
     partitions of ``path`` are left byte-identical (dynamic mode —
     static mode would truncate the whole table)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with session_conf(
+        df.sparkSession, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+    ):
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def _staging_dir(path: str) -> str:
@@ -91,13 +90,9 @@ def recover_staged_upsert(spark, path: str, partition_col: str, schema=None) -> 
         overwrite_partitions(staged, path, [partition_col])
     else:
         key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev = spark.conf.get(key, "true")
-        spark.conf.set(key, "false")
-        try:
+        with session_conf(spark, key, "false"):
             staged = spark.read.parquet(staging)
             overwrite_partitions(staged, path, [partition_col])
-        finally:
-            spark.conf.set(key, prev)
     _delete_dir(spark, staging)
 
 

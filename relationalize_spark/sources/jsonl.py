@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..operators.infer import infer_and_convert
 from ..operators.relationalize import relationalize
+from ..plans.session import session_conf
 from ..schema import Schema
 
 
@@ -54,6 +55,9 @@ class VNode:
 def parse_variant_schema(s: str) -> VNode:
     pos = 0
 
+    def malformed(what: str) -> ValueError:
+        return ValueError(f"malformed variant schema: {what} at {pos} in {s!r}")
+
     def parse_type() -> VNode:
         nonlocal pos
         if s.startswith("OBJECT<", pos):
@@ -61,7 +65,8 @@ def parse_variant_schema(s: str) -> VNode:
             node = VNode("object")
             while s[pos] != ">":
                 name = parse_name()
-                assert s.startswith(": ", pos), f"expected ': ' at {pos} in {s!r}"
+                if not s.startswith(": ", pos):
+                    raise malformed("expected ': '")
                 pos += 2
                 node.fields[name] = parse_type()
                 if s.startswith(", ", pos):
@@ -71,7 +76,8 @@ def parse_variant_schema(s: str) -> VNode:
         if s.startswith("ARRAY<", pos):
             pos += len("ARRAY<")
             node = VNode("array", element=parse_type())
-            assert s[pos] == ">", f"expected '>' at {pos} in {s!r}"
+            if not s.startswith(">", pos):
+                raise malformed("expected '>'")
             pos += 1
             return node
         # leaf: runs to the next top-level ',' or '>'; may itself
@@ -112,7 +118,8 @@ def parse_variant_schema(s: str) -> VNode:
         return name
 
     node = parse_type()
-    assert pos == len(s), f"trailing content at {pos} in {s!r}"
+    if pos != len(s):
+        raise malformed("trailing content")
     return node
 
 
@@ -346,10 +353,7 @@ def relationalize_json(
     # names case-insensitively by default and would throw
     # AMBIGUOUS_REFERENCE while we build the plans, so flip the session
     # to case-sensitive for the (eager) analysis phase and restore.
-    session = vdf.sparkSession
-    prev_case = session.conf.get("spark.sql.caseSensitive")
-    session.conf.set("spark.sql.caseSensitive", "true")
-    try:
+    with session_conf(vdf.sparkSession, "spark.sql.caseSensitive", "true"):
         typed = vdf.select(
             F.try_variant_get(F.col(vcol), "$", _cast_ddl(tree)).alias("__r__")
         ).select("__r__.*")
@@ -379,6 +383,4 @@ def relationalize_json(
                 tables[tname], schemas[tname] = tdf, infer_schema(
                     tdf, tag_hints=hints.get(tname)
                 )
-    finally:
-        session.conf.set("spark.sql.caseSensitive", prev_case)
     return RelationalizedJson(tables, schemas, _cached_input=cached)

@@ -21,6 +21,7 @@ directly:
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,9 +30,22 @@ from pyspark.sql import types as ST
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.relationalize import relationalize
+from ..plans.session import session_conf
 from ..schema import Schema
 
 TableSink = Callable[[str, DataFrame, int], None]
+
+#: JsonStreamDemux's per-batch table writes run on a driver thread pool
+#: of this size. Part of the per-table per-batch floor is driver latency
+#: (Catalyst analysis + job submission + schema-file write) that
+#: concurrent submission overlaps across tables (Py4J releases the GIL
+#: during JVM calls; writes target disjoint directories; the
+#: schema-before-rows crash invariant is per-table and preserved inside
+#: each task). Measured on the 70-table wide-dynamic corpus, same
+#: session (BASELINE.md r8): steady per-batch 50.0 s serial -> 35.2 s at
+#: 8 threads (1.42x; 16 threads no better — the residue is executor-side
+#: job work plus lock-serialized analysis, not submission latency).
+_WRITE_POOL_SIZE = 8
 
 
 # -- Hadoop-FS text helpers (work on local / HDFS / s3a alike) ---------------
@@ -213,7 +227,9 @@ class JsonStreamDemux:
     recovers every table's schema from these files on first use;
     ``finalize`` refuses loudly if ``base_path`` holds a table
     directory with no recoverable schema (e.g. written by something
-    other than this demux) rather than emit a silently narrowed view.
+    other than this demux), or a ``__rows__`` tree left by the removed
+    one-write-per-batch layout, rather than emit a silently narrowed
+    view.
 
     Scale shape: per batch this is the batch pipeline (variant casts
     and projections, one branch-analysis aggregate per nesting level
@@ -224,14 +240,14 @@ class JsonStreamDemux:
     MICRO-BATCH SIZING (measured, BASELINE.md r8): per-batch latency
     scales with DISCOVERED TABLE COUNT (one Catalyst analysis + one
     write job + one schema write each), independent of row count —
-    ~0.7 s/table submitted serially, ~0.5 s/table with the default
-    8-thread write pool (``write_concurrency``): a 70-table dynamic
-    stream has a ~35 s per-batch floor even at 250 rows/batch. Size
-    triggers so the batch interval is well above 0.5 s x expected
-    table count (multi-minute triggers or AvailableNow for wide
-    corpora; rows are effectively free next to the per-table floor),
-    and pre-split corpora expected to discover hundreds of tables
-    into one demux per family.
+    ~0.5 s/table through the fixed 8-thread write pool
+    (``_WRITE_POOL_SIZE``; ~0.7 s/table when submitted serially): a
+    70-table dynamic stream has a ~35 s per-batch floor even at 250
+    rows/batch. Size triggers so the batch interval is well above
+    0.5 s x expected table count (multi-minute triggers or
+    AvailableNow for wide corpora; rows are effectively free next to
+    the per-table floor), and pre-split corpora expected to discover
+    hundreds of tables into one demux per family.
     """
 
     base_path: str
@@ -251,57 +267,6 @@ class JsonStreamDemux:
     #: finalize(dedup_replays=True) once (hash rids), or clean the
     #: flat files, before trusting the no-dedup view.
     exactly_once: bool = True
-    #: HOW each batch's rows land (r10, the attack on the measured
-    #: per-TABLE driver floor):
-    #: - "per_table" (default, the attested layout): one write job
-    #:   per discovered table under ``{base}/{table}`` — ~0.5-0.7 s
-    #:   of driver latency per table per batch (Catalyst analysis +
-    #:   job submission), overlapped by the write pool.
-    #: - "single_job": every table's rows render to JSON lines
-    #:   driver-free (``to_json(struct(*))`` — the same Jackson
-    #:   rendering the per-table json writer uses), union into ONE
-    #:   frame tagged ``__table__``, and land in ONE
-    #:   ``partitionBy("__table__")`` text write under
-    #:   ``{base}/__rows__`` — one job submission per batch no matter
-    #:   how many tables the batch discovered. MEASURED NEGATIVE for
-    #:   latency (bench_demux_scale F, 70-table corpus, same session):
-    #:   66.5 s/batch vs per_table's 35.2 s — analyzing one 70-branch
-    #:   union serializes what the 8-thread pool overlaps, the r7
-    #:   plan-fusion result in new clothes. Choose it only when the
-    #:   OUTPUT SHAPE is worth that cost: downstream consumers get a
-    #:   single partition-pruned tree
-    #:   (``__rows__/batch=N/__table__=T``) instead of N directories.
-    #:   The per-table _schema.json metadata writes are unchanged and
-    #:   already skip when stable. ``finalize``/``read_quarantine``
-    #:   read BOTH layouts (their union), so switching layouts
-    #:   mid-corpus is safe; partition values are escaped/restored by
-    #:   Spark's partition discovery, so exotic table names survive
-    #:   the round trip. exactly_once overwrites
-    #:   ``__rows__/batch={id}`` per batch (same idempotent-replay
-    #:   contract as the per-table batch dirs); append mode lands
-    #:   under the sentinel ``batch=-1`` so the tree keeps ONE
-    #:   partition depth — flipping exactly_once mid-corpus is safe
-    #:   here too (mixed depths would break partition discovery,
-    #:   which per_table tolerates via recursiveFileLookup but a
-    #:   partition-discovered tree must not). Corpora whose appends
-    #:   predate the batch=-1 sentinel (flat ``__rows__/__table__=T``)
-    #:   stay readable: ``finalize`` detects the two generations and
-    #:   reads each as its own partition-discovery root.
-    write_layout: str = "per_table"
-    #: per-batch table writes run on a driver thread pool of this
-    #: size (1 = serial). Part of the ~0.7 s/table per-batch floor is
-    #: driver latency (Catalyst analysis + job submission +
-    #: schema-file write, serially per table) that concurrent
-    #: submission overlaps across tables (Py4J releases the GIL
-    #: during JVM calls; writes target disjoint directories; the
-    #: schema-before-rows crash invariant is per-table and preserved
-    #: inside each task). Measured on the 70-table wide-dynamic
-    #: corpus, same session (BASELINE.md r8): steady per-batch
-    #: 50.0 s serial -> 35.2 s at 8 threads (1.42x; 16 threads no
-    #: better — the residue is executor-side job work plus
-    #: lock-serialized analysis, not submission latency). Default 8;
-    #: set 1 to restore strictly serial submission.
-    write_concurrency: int = 8
     schemas: dict[str, Schema] = field(default_factory=dict)
     #: batch_id -> number of malformed lines quarantined in that batch
     #: (write-time Observation, no second scan; cleared with the
@@ -337,7 +302,9 @@ class JsonStreamDemux:
         the running state (no-op after the first call). Raises for a
         table directory holding rows without a recoverable
         _schema.json — appended rows with no schema would silently
-        vanish from finalize(). Underscore/dot-prefixed directories
+        vanish from finalize() — and for a ``__rows__`` tree, whose
+        rows the removed one-write-per-batch layout wrote and finalize
+        no longer reads. Other underscore/dot-prefixed directories
         are metadata, not tables (``_quarantine``, checkpoint
         leftovers). Crash-window recovery: a complete
         ``_schema.json.tmp`` stranded by a crash between
@@ -348,6 +315,14 @@ class JsonStreamDemux:
         if self._recovered:
             return
         for t in _fs_list_dirs(spark, self.base_path):
+            if t == "__rows__":
+                raise RuntimeError(
+                    f"JsonStreamDemux: {self.base_path}/__rows__ holds rows "
+                    "of the removed one-write-per-batch layout, which "
+                    "finalize() no longer reads; they would silently drop "
+                    "out of the typed view. Move them into per-table "
+                    "directories or start from a fresh base_path."
+                )
             if t.startswith(("_", ".")):
                 continue
             spath = f"{self.base_path}/{t}/_schema.json"
@@ -437,156 +412,52 @@ class JsonStreamDemux:
         # the table WRITES below must run case-sensitive too or the
         # writer rejects casefold-duplicate columns
         # (COLUMN_ALREADY_EXISTS) and kills the stream.
-        prev_case = spark.conf.get("spark.sql.caseSensitive")
-        spark.conf.set("spark.sql.caseSensitive", "true")
         try:
-            # running-schema merges are serial driver dict updates
-            # (cheap, and self.schemas must not race) ...
-            for t in out.tables:
-                self.schemas[t] = Schema.merge(
-                    self.schemas.get(t, Schema()), out.schemas[t]
-                )
-
-            def write_schema(t: str) -> None:
-                # Schema-stable fast path: when the merged schema
-                # serializes to exactly what is already on disk, the
-                # rewrite is a no-op — skip the per-table FS round
-                # trip (delete + write + rename). After discovery
-                # settles, every batch takes this branch for every
-                # table (measured in examples/bench_demux_scale.py E).
-                ser = self.schemas[t].serialize()
-                if self._written_schemas.get(t) != ser:
-                    _fs_write_text(
-                        spark, f"{self.base_path}/{t}/_schema.json", ser
-                    )
-                    self._written_schemas[t] = ser
-
-            def write_one(t: str) -> None:
-                # schema first, rows second (see class docstring).
-                write_schema(t)
-                if self.exactly_once:
-                    # idempotent landing zone: a replayed batch
-                    # OVERWRITES its own directory instead of
-                    # re-appending — exactly-once by construction,
-                    # no finalize-side dedup shuffle, uuid-rid-safe.
-                    out.tables[t].write.mode("overwrite").json(
-                        f"{self.base_path}/{t}/batch={batch_id}"
-                    )
-                else:
-                    out.tables[t].write.mode("append").json(
-                        f"{self.base_path}/{t}"
+            with session_conf(spark, "spark.sql.caseSensitive", "true"):
+                # running-schema merges are serial driver dict updates
+                # (cheap, and self.schemas must not race) ...
+                for t in out.tables:
+                    self.schemas[t] = Schema.merge(
+                        self.schemas.get(t, Schema()), out.schemas[t]
                     )
 
-            names = list(out.tables)
-            if self.write_layout == "single_job":
-                from functools import reduce
-
-                # schema metadata first (schema-before-rows crash
-                # invariant; skipped per table when stable), then ONE
-                # union write for every table's rows
-                for t in names:
-                    write_schema(t)
-                parts = [
-                    out.tables[t].select(
-                        F.to_json(F.struct("*")).alias("value"),
-                        F.lit(t).alias("__table__"),
-                    )
-                    for t in names
-                ]
-                # A batch can discover zero tables only if
-                # relationalize_json emits nothing (the root table is
-                # always emitted today, but the per_table path is a
-                # no-op on an empty table set and this lane must fail
-                # the same way — reduce() on [] would raise instead).
-                if parts:
-                    allrows = reduce(DataFrame.unionByName, parts)
-                    # Rows ALWAYS land under a batch=N level — append
-                    # mode uses the sentinel batch=-1 — so the
-                    # __rows__ tree keeps ONE partition depth even if
-                    # exactly_once is flipped mid-corpus (partition
-                    # discovery rejects trees that mix
-                    # __rows__/__table__=T with
-                    # __rows__/batch=N/__table__=T).
+                def write_one(t: str) -> None:
+                    # schema first, rows second (see class docstring).
+                    # Schema-stable fast path: when the merged schema
+                    # serializes to exactly what is already on disk,
+                    # the rewrite is a no-op — skip the per-table FS
+                    # round trip (delete + write + rename). After
+                    # discovery settles, every batch takes this branch
+                    # for every table (measured in
+                    # examples/bench_demux_scale.py E).
+                    ser = self.schemas[t].serialize()
+                    if self._written_schemas.get(t) != ser:
+                        _fs_write_text(
+                            spark, f"{self.base_path}/{t}/_schema.json", ser
+                        )
+                        self._written_schemas[t] = ser
                     if self.exactly_once:
-                        allrows.write.mode("overwrite").partitionBy(
-                            "__table__"
-                        ).text(f"{self.base_path}/__rows__/batch={batch_id}")
+                        # idempotent landing zone: a replayed batch
+                        # OVERWRITES its own directory instead of
+                        # re-appending — exactly-once by construction,
+                        # no finalize-side dedup shuffle, uuid-rid-safe.
+                        out.tables[t].write.mode("overwrite").json(
+                            f"{self.base_path}/{t}/batch={batch_id}"
+                        )
                     else:
-                        allrows.write.mode("append").partitionBy(
-                            "__table__"
-                        ).text(f"{self.base_path}/__rows__/batch=-1")
-            elif self.write_concurrency > 1 and len(names) > 1:
+                        out.tables[t].write.mode("append").json(
+                            f"{self.base_path}/{t}"
+                        )
+
                 # ... the per-table writes are independent (disjoint
                 # directories, shared persisted parse) and
                 # driver-latency bound, so they overlap on a pool.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                    max_workers=min(self.write_concurrency, len(names))
-                ) as ex:
+                with ThreadPoolExecutor(max_workers=_WRITE_POOL_SIZE) as ex:
                     # list() drains the map so the first failure
                     # raises AFTER the pool joins (no stranded tasks)
-                    list(ex.map(write_one, names))
-            else:
-                for t in names:
-                    write_one(t)
+                    list(ex.map(write_one, out.tables))
         finally:
-            spark.conf.set("spark.sql.caseSensitive", prev_case)
             out.unpersist()
-
-    def _table_lines(self, spark: SparkSession, t: str) -> DataFrame:
-        """One ``value`` column of table ``t``'s raw JSONL from
-        whichever layouts hold rows — the per-table directory (flat
-        appends AND exactly_once ``batch=N`` subdirs, read with
-        recursiveFileLookup so ``_``-prefixed metadata is skipped)
-        unioned with the single-job ``__rows__`` tree (read through
-        partition discovery so the ``__table__`` filter prunes to
-        ``t``'s directories at plan time and escaped partition values
-        decode back to the real table name). A demux that has only
-        ever used one layout reads only that one; a corpus migrated
-        between layouts reads both."""
-        parts: list[DataFrame] = []
-        if _fs_has_data_files(spark, f"{self.base_path}/{t}"):
-            parts.append(
-                spark.read.option("recursiveFileLookup", "true").text(
-                    f"{self.base_path}/{t}"
-                )
-            )
-        rows_root = f"{self.base_path}/__rows__"
-        fs, p = _fs_for(spark, rows_root)
-        if fs.exists(p):
-            # The tree may hold TWO single-job generations: the
-            # legacy flat append shape (__rows__/__table__=T, written
-            # before r11 moved appends under batch=-1) and the
-            # uniform batch=N shape. Partition discovery rejects a
-            # tree mixing the two depths, so each consistent
-            # generation is read as its own root (basePath keeps the
-            # partition columns resolving against __rows__) and the
-            # results union — old corpora stay readable after the
-            # layout change.
-            kids = _fs_list_dirs(spark, rows_root)
-            legacy = [k for k in kids if k.startswith("__table__=")]
-            batched = [k for k in kids if k.startswith("batch=")]
-            if legacy and batched:
-                for gen in (legacy, batched):
-                    parts.append(
-                        spark.read.option("basePath", rows_root)
-                        .text([f"{rows_root}/{k}" for k in gen])
-                        .where(F.col("__table__") == t)
-                        .select("value")
-                    )
-            else:
-                parts.append(
-                    spark.read.text(rows_root)
-                    .where(F.col("__table__") == t)
-                    .select("value")
-                )
-        if not parts:
-            return spark.createDataFrame([], "value string")
-        out = parts[0]
-        for extra in parts[1:]:
-            out = out.unionByName(extra)
-        return out
 
     def attach(self, stream_df: DataFrame) -> DataStreamWriter:
         """Wire onto a stream; caller picks trigger/checkpoint."""
@@ -625,19 +496,23 @@ class JsonStreamDemux:
 
         self._recover(spark)
         tables: dict[str, DataFrame] = {}
-        prev_case = spark.conf.get("spark.sql.caseSensitive")
-        spark.conf.set("spark.sql.caseSensitive", "true")
-        try:
+        with session_conf(spark, "spark.sql.caseSensitive", "true"):
             for t, schema in self.schemas.items():
-                lines = self._table_lines(spark, t).where(
-                    F.length(F.trim("value")) > 0
-                )
-                if dedup_replays:
-                    vdf = _dedup_lines(lines).select(
-                        F.parse_json("value").alias("v")
+                tdir = f"{self.base_path}/{t}"
+                # flat appends AND exactly_once batch=N subdirs; the
+                # recursive read skips _-prefixed metadata. A dir with
+                # only _schema.json (crash before the first append)
+                # has no rows to read.
+                if _fs_has_data_files(spark, tdir):
+                    lines = spark.read.option("recursiveFileLookup", "true").text(
+                        tdir
                     )
                 else:
-                    vdf = lines.select(F.parse_json("value").alias("v"))
+                    lines = spark.createDataFrame([], "value string")
+                lines = lines.where(F.length(F.trim("value")) > 0)
+                if dedup_replays:
+                    lines = _dedup_lines(lines)
+                vdf = lines.select(F.parse_json("value").alias("v"))
                 node = VNode(
                     kind="object",
                     fields={
@@ -651,8 +526,6 @@ class JsonStreamDemux:
                     )
                 ).select("__r__.*")
                 tables[t] = convert_choice_columns(flat, schema.columns)
-        finally:
-            spark.conf.set("spark.sql.caseSensitive", prev_case)
         return tables
 
     def read_quarantine(

@@ -39,6 +39,21 @@ def test_parse_variant_schema_roundtrip():
     assert t.fields["arr"].element.fields["k"].leaf_type == "DECIMAL(21,1)"
 
 
+@pytest.mark.parametrize(
+    "bad, pos",
+    [
+        ("OBJECT<a:BIGINT>", 8),  # missing the space after ':'
+        ("ARRAY<BIGINT", 12),  # unterminated array
+        ("BIGINT>x", 6),  # trailing content
+    ],
+)
+def test_parse_variant_schema_rejects_malformed(bad, pos):
+    # a ValueError, not an assert: under ``python -O`` these inputs
+    # used to parse to a wrong tree without any error
+    with pytest.raises(ValueError, match=rf"at {pos} in {bad!r}"):
+        parse_variant_schema(bad)
+
+
 # -- choice semantics through the full pipeline ------------------------------
 
 def test_choice_split_mixed_types(spark):

@@ -4,8 +4,10 @@ reads, small-files compaction."""
 import json
 
 import pyspark.sql.functions as F
+import pytest
 
 from relationalize_spark.plans.scale import compact_files
+from relationalize_spark.plans.session import session_conf
 from relationalize_spark.sources.readers import (
     read_jsonl_quarantine,
     read_parquet_evolving,
@@ -62,3 +64,20 @@ def test_compact_files_reduces_file_count(spark, tmp_path):
         spark.read.parquet(out).agg(F.sum("id")).collect()[0][0]
         == df.agg(F.sum("id")).collect()[0][0]
     )
+
+
+def test_session_conf_restored_after_exception(spark):
+    """session_conf puts back what it found — a value, or no value at
+    all — when the scope raises. Conf reads only; no Spark job."""
+    key = "spark.relationalize.test.scoped"
+    try:
+        for before in (None, "outer"):
+            if before is not None:
+                spark.conf.set(key, before)
+            with pytest.raises(RuntimeError, match="boom"):
+                with session_conf(spark, key, "inner"):
+                    assert spark.conf.get(key) == "inner"
+                    raise RuntimeError("boom")
+            assert spark.conf.get(key, None) == before
+    finally:
+        spark.conf.unset(key)

@@ -579,11 +579,13 @@ def test_json_stream_demux_casefold_duplicate_keys(spark, tmp_path):
 
 
 def test_json_stream_demux_write_pool_parity(spark, tmp_path):
-    """r8: the default 8-thread write pool must produce EXACTLY the
-    serial submission's output — same discovered schemas, same
-    finalize values, same per-batch directory layout — including
-    after a replayed batch (the schema-before-rows invariant is
-    per-table and each pool task owns one table end to end)."""
+    """r8: the 8-thread write pool's output after a replayed batch
+    (same instance, same batch_id) must EXACTLY equal a run with no
+    replay — same discovered schemas, same finalize values — because
+    each pool task owns one table end to end (schema-before-rows,
+    then an overwrite of that table's own batch directory). A fresh
+    instance (checkpoint restart) finalizes to the same view from
+    disk alone."""
     from relationalize_spark.streaming.relationalize_stream import JsonStreamDemux
 
     lines = [
@@ -592,23 +594,45 @@ def test_json_stream_demux_write_pool_parity(spark, tmp_path):
         ('{"k": 3, "b": {"y": "s"}, "c": [3]}',),
     ]
     batch = spark.createDataFrame(lines, "value string")
-    outs = {}
-    for label, conc in (("serial", 1), ("pool", 8)):
-        base = str(tmp_path / label)
-        d = JsonStreamDemux(base, "root", key_cols=["k"], write_concurrency=conc)
-        d.process_batch(batch, 0)
-        d.process_batch(batch, 0)  # replay: overwrite must stay per-table
-        d.process_batch(batch, 1)
+
+    def snap(d):
         tables = d.finalize(spark)
-        outs[label] = (
+        return (
             {t: s.serialize() for t, s in d.schemas.items()},
             {
                 t: sorted(repr(tuple(r)) for r in df.collect())
                 for t, df in sorted(tables.items())
             },
         )
-    assert outs["serial"][0] == outs["pool"][0]
-    assert outs["serial"][1] == outs["pool"][1]
+
+    outs = {}
+    for label, replay in (("once", False), ("replayed", True)):
+        d = JsonStreamDemux(str(tmp_path / label), "root", key_cols=["k"])
+        d.process_batch(batch, 0)
+        if replay:
+            d.process_batch(batch, 0)
+        d.process_batch(batch, 1)
+        outs[label] = snap(d)
+    assert outs["replayed"] == outs["once"]
+    restarted = JsonStreamDemux(
+        str(tmp_path / "replayed"), "root", key_cols=["k"]
+    )
+    assert snap(restarted) == outs["once"]
+
+
+def test_json_stream_demux_refuses_leftover_rows_tree(spark, tmp_path):
+    """Rows under {base_path}/__rows__ (the one-write-per-batch layout,
+    since removed) are no longer read by finalize(); a base_path
+    holding them must fail loudly, naming the directory, instead of
+    silently dropping those rows from the typed view."""
+    from relationalize_spark.streaming.relationalize_stream import JsonStreamDemux
+
+    base = tmp_path / "out"
+    rows = base / "__rows__" / "batch=0"
+    rows.mkdir(parents=True)
+    (rows / "part-0.txt").write_text('{"k": 1}\n')
+    with pytest.raises(RuntimeError, match=r"/__rows__ holds rows of the removed"):
+        JsonStreamDemux(str(base), "root").finalize(spark)
 
 
 def test_read_quarantine_missing_dir_is_empty(spark, tmp_path):
@@ -635,147 +659,3 @@ def test_quarantine_counts_idempotent_under_replay(spark, tmp_path):
     d.process_batch(batch, 0)
     d.process_batch(batch, 0)  # same instance, same batch_id (replay)
     assert d.quarantine_counts == {0: 1}
-
-
-def test_json_stream_demux_single_job_layout_parity(spark, tmp_path):
-    """r10: write_layout='single_job' lands every table's rows in ONE
-    partitionBy(__table__) write per batch. Contract: finalize()
-    produces value-identical tables to the per_table layout on the
-    same input; exactly-once replay holds (batch dir overwrite); a
-    restarted instance recovers; layouts can be mixed mid-corpus."""
-    from relationalize_spark.streaming.relationalize_stream import JsonStreamDemux
-
-    lines1 = ['{"k": 1, "xs": [1, 2], "o": {"a": 5}}',
-              '{"k": 2, "xs": [3], "o": {"a": 6}}']
-    lines2 = ['{"k": 3, "b": 7}', '{"k": 4, "xs": [9], "b": 8}']
-
-    def run(base, layout, mixed=False):
-        d = JsonStreamDemux(
-            str(tmp_path / base), "root", key_cols=["k"],
-            write_layout=layout,
-        )
-        d.process_batch(
-            spark.createDataFrame([(ln,) for ln in lines1], "value string"), 0
-        )
-        if mixed:  # switch layouts between batches: both must read back
-            d.write_layout = (
-                "per_table" if layout == "single_job" else "single_job"
-            )
-        d.process_batch(
-            spark.createDataFrame([(ln,) for ln in lines2], "value string"), 1
-        )
-        return d
-
-    def snap(d):
-        return {
-            t: sorted(
-                tuple(str(v) for v in row) for row in df.collect()
-            )
-            for t, df in d.finalize(spark).items()
-        }
-
-    base_tables = snap(run("per_table", "per_table"))
-    single = run("single", "single_job")
-    assert snap(single) == base_tables
-    assert snap(run("mixed", "single_job", mixed=True)) == base_tables
-
-    # exactly-once: replaying batch 1 through the same instance
-    # overwrites its own __rows__/batch=1 dir — no duplicates
-    single.process_batch(
-        spark.createDataFrame([(ln,) for ln in lines2], "value string"), 1
-    )
-    assert snap(single) == base_tables
-
-    # restart: fresh instance recovers schemas from the per-table
-    # _schema.json dirs (rows live only under __rows__)
-    d2 = JsonStreamDemux(
-        str(tmp_path / "single"), "root", key_cols=["k"],
-        write_layout="single_job",
-    )
-    assert snap(d2) == base_tables
-
-    # r11 ADVICE: flipping exactly_once mid-corpus must keep the
-    # __rows__ tree at ONE partition depth (append mode lands under
-    # the sentinel batch=-1) — mixed depths would kill partition
-    # discovery on the whole tree, not just the flipped batch.
-    flip = JsonStreamDemux(
-        str(tmp_path / "flip"), "root", key_cols=["k"],
-        write_layout="single_job",
-    )
-    flip.process_batch(
-        spark.createDataFrame([(ln,) for ln in lines1], "value string"), 0
-    )
-    flip.exactly_once = False
-    flip.process_batch(
-        spark.createDataFrame([(ln,) for ln in lines2], "value string"), 1
-    )
-    assert snap(flip) == base_tables
-
-
-def test_json_stream_demux_single_job_legacy_flat_rows_migrate(spark, tmp_path):
-    """r11 review: a single_job corpus whose append-mode rows predate
-    the batch=-1 sentinel (flat __rows__/__table__=T) must stay
-    readable after the upgraded code appends next to it — the two
-    generations have different partition depths, so finalize reads
-    each as its own discovery root."""
-    import os
-
-    from relationalize_spark.streaming.relationalize_stream import JsonStreamDemux
-
-    base = str(tmp_path / "out")
-    d = JsonStreamDemux(
-        base, "root", key_cols=["k"],
-        write_layout="single_job", exactly_once=False,
-    )
-    # batch 0 through the OLD layout: simulate by writing the flat
-    # shape the pre-r11 code produced (rows directly under
-    # __rows__/__table__=T), plus the schema metadata via the demux.
-    d.process_batch(
-        spark.createDataFrame([('{"k": 1}',)], "value string"), 0
-    )
-    # relocate batch=-1 rows to the legacy flat layout
-    rows_root = f"{base}/__rows__"
-    legacy_dirs = os.listdir(f"{rows_root}/batch=-1")
-    for td in legacy_dirs:
-        os.rename(f"{rows_root}/batch=-1/{td}", f"{rows_root}/{td}")
-    os.rmdir(f"{rows_root}/batch=-1")
-    # batch 1 through the NEW layout appends under batch=-1
-    d.process_batch(
-        spark.createDataFrame([('{"k": 2}',)], "value string"), 1
-    )
-    tables = d.finalize(spark)
-    got = sorted(str(r.k) for r in tables["root"].select("k").collect())
-    assert got == ["1", "2"]
-
-
-def test_json_stream_demux_single_job_empty_table_set(spark, tmp_path, monkeypatch):
-    """r11 ADVICE: a batch whose relationalize yields ZERO tables must
-    be a no-op under single_job (the per_table path writes nothing;
-    an unguarded reduce() over [] would raise and kill the stream).
-    Unreachable through the public API today — the root table is
-    always emitted — so the zero-table result is injected."""
-    import importlib
-
-    mod = importlib.import_module(
-        "relationalize_spark.streaming.relationalize_stream"
-    )
-    jsonl_mod = importlib.import_module("relationalize_spark.sources.jsonl")
-
-    class _Empty:
-        tables: dict = {}
-        schemas: dict = {}
-
-        def unpersist(self):
-            pass
-
-    # process_batch imports relationalize_json from sources.jsonl at
-    # call time, so the patch goes on the DEFINING module
-    monkeypatch.setattr(
-        jsonl_mod, "relationalize_json", lambda *a, **k: _Empty()
-    )
-    d = mod.JsonStreamDemux(
-        str(tmp_path / "out"), "root", key_cols=["k"],
-        write_layout="single_job",
-    )
-    d.process_batch(spark.createDataFrame([('{"k": 1}',)], "value string"), 0)
-    assert d.finalize(spark) == {}
