@@ -435,9 +435,10 @@ def main() -> None:
         def run():
             # q125 shape on the events table (orders is not replicated):
             # per-row dynamic key -> variant-branch relationalize ->
-            # child stats re-joined. Exercises the r5 _expand_variants
-            # machinery (flags agg per level + per-row split-out) at
-            # scale, including the JSON parse of every row.
+            # child stats re-joined. Exercises the dynamic analysis
+            # (whole-object merge + one path-keyed stats round) and
+            # _expand_variants' per-row split-out at scale, including
+            # the JSON parse of every row.
             from relationalize_spark.plans.scale import ensure_parallelism
             from relationalize_spark.sources.jsonl import relationalize_json
 

@@ -194,12 +194,12 @@ def infer_and_convert(
 
     ``tag_hints`` maps column -> already-normalized tag for columns
     whose observed tags are known from an earlier pass —
-    relationalize's per-level variant-branch analysis collects them in
-    the SAME aggregation that decides object/array split-out
-    (operators/relationalize.py:_expand_variants), so the dynamic
-    pipeline pays one aggregate per nesting level TOTAL instead of one
-    there plus one here. Hinted columns skip the scan; any unhinted
-    variant columns still get the one-aggregation inference."""
+    relationalize's path-keyed position stats collect them in the
+    SAME round that decides object/array split-out
+    (operators/relationalize.py:_position_stats), so the dynamic
+    pipeline's inference runs no scan of its own. Hinted columns skip
+    the scan; any unhinted variant columns (e.g. of a table unioned
+    from several parents) still get the one-aggregation inference."""
     schema = infer_schema(df, tag_hints)
     members = {
         f.name: schema.columns[f.name]

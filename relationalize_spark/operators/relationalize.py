@@ -72,24 +72,40 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _flatten_structs(df: DataFrame) -> DataFrame:
-    """Expand every StructType column into ``{parent}_{child}`` columns,
-    repeating until no structs remain. Later names win on collision."""
+#: path step for "every element" of an array (or every value of a
+#: map, or of an array-valued VARIANT) and for "every key" of a map; a
+#: struct field or object key is the step of its own name. A column's
+#: JSON path is a tuple of steps from the input frame's top level.
+_EACH, _KEYS = 0, 1
+
+
+def _flatten_structs(
+    df: DataFrame, paths: dict[str, tuple], prefixes: dict[str, str] | None = None
+) -> tuple[DataFrame, dict[str, tuple]]:
+    """Expand every StructType column into ``{parent}_{child}`` columns
+    (``{prefixes[parent]}_{child}`` where given), repeating until no
+    structs remain. Later names win on collision; ``paths`` (column ->
+    JSON path) follows the winners."""
     while any(
         isinstance(f.dataType, StructType)
         for f in df.schema.fields
         if f.name != _ROW_KEY
     ):
         cols: dict[str, Column] = {}
+        new_paths: dict[str, tuple] = {}
         for f in df.schema.fields:
             if f.name == _ROW_KEY or not isinstance(f.dataType, StructType):
                 cols[f.name] = F.col(_q(f.name))
+                new_paths[f.name] = paths.get(f.name)
                 continue
+            prefix = (prefixes or {}).get(f.name, f.name)
             for sub in f.dataType.fields:
-                flat = f"{f.name}{DELIM}{sub.name}"
+                flat = f"{prefix}{DELIM}{sub.name}"
                 cols[flat] = F.col(f"{_q(f.name)}.{_q(sub.name)}").alias(flat)
+                new_paths[flat] = paths[f.name] + (sub.name,)
         df = df.select(*[c.alias(n) for n, c in cols.items()])
-    return df
+        paths, prefixes = new_paths, None
+    return df, paths
 
 
 def _hash_rid(table: str, path: str) -> Column:
@@ -116,10 +132,170 @@ def _obj_prefix(c: str) -> str:
     return c[: -len(suffix)] if c.endswith(suffix) else c
 
 
+def _type_positions(dt, path: tuple):
+    """The VARIANT positions in a Spark type: struct fields, array
+    elements and map values, at any depth."""
+    if isinstance(dt, VariantType):
+        yield path
+    elif isinstance(dt, StructType):
+        for f in dt.fields:
+            yield from _type_positions(f.dataType, path + (f.name,))
+    elif isinstance(dt, ArrayType):
+        yield from _type_positions(dt.elementType, path + (_EACH,))
+    elif isinstance(dt, MapType):
+        yield from _type_positions(dt.valueType, path + (_EACH,))
+
+
+def _cast_positions(node, path: tuple):
+    """The VARIANT positions in a merged-schema tree cast by
+    ``_cast_ddl``: its conflicted, all-null and fractional leaves."""
+    from ..sources.jsonl import _cast_ddl
+
+    if node.kind == "object":
+        for k, child in node.fields.items():
+            yield from _cast_positions(child, path + (k,))
+    elif node.kind == "array":
+        yield from _cast_positions(node.element, path + (_EACH,))
+    elif _cast_ddl(node) == "variant":
+        yield path
+
+
+def _missing(path: tuple, stats: dict):
+    """The VARIANT positions at or below ``path`` that planning will
+    look up and ``stats`` does not hold yet: ``path`` itself, the
+    elements of its array branch, and the VARIANT positions of its
+    object branch as cast by its merged object schema."""
+    if path not in stats:
+        yield path
+        return
+    observed, obj = stats[path]
+    if "arr" in observed:
+        yield from _missing(path + (_EACH,), stats)
+    if "obj" in observed:
+        for p in _cast_positions(obj, path):
+            yield from _missing(p, stats)
+
+
+def _flat(arrays: Column) -> Column:
+    """Flatten an array of arrays, skipping null inner arrays."""
+    return F.flatten(F.filter(arrays, lambda a: a.isNotNull()))
+
+
+def _values_at(types: dict, path: tuple) -> Column:
+    """``array<variant>`` of every value a row holds at VARIANT
+    position ``path``. Typed struct fields and arrays are read as they
+    are, VARIANT ones through the casts planning applies to them;
+    arrays are walked with ``transform``, so a position inside an
+    array costs no generator."""
+
+    def at(col: Column, dt, steps: tuple) -> Column:
+        if not steps:
+            return F.array(col)
+        step, rest = steps[0], steps[1:]
+        if step == _EACH:
+            if isinstance(dt, ArrayType):
+                arr, et = col, dt.elementType
+            elif isinstance(dt, MapType):
+                arr, et = F.map_values(col), dt.valueType
+            else:
+                arr, et = F.try_variant_get(col, "$", "array<variant>"), VariantType()
+            return _flat(F.transform(arr, lambda e: at(e, et, rest)))
+        if isinstance(dt, StructType):
+            return at(col.getField(step), dt[step].dataType, rest)
+        obj = F.try_variant_get(col, "$", f"struct<{_q(step)}: variant>")
+        return at(obj.getField(step), VariantType(), rest)
+
+    return at(F.col(_q(path[0])), types[path[0]], path[1:])
+
+
+def _stats_round(df: DataFrame, positions: list[tuple]) -> dict[tuple, tuple]:
+    """ONE eager action over ``df``: the class set (``arr``/``obj``/
+    scalar reference tags) and the merged object-branch schema of
+    every position in ``positions``, and the same pair one level
+    further down — for the elements of each position's array branch
+    and for each key of its object branch. Rows are grouped by
+    ``(position, child)``, so the aggregate is as wide for a thousand
+    positions as for one."""
+    from ..sources.jsonl import parse_variant_schema
+    from .infer import ref_tag_from_schema_str
+
+    types = {f.name: f.dataType for f in df.schema.fields}
+    pv = df.select(
+        F.inline(F.array(*[
+            F.struct(F.lit(i).alias("p"), _values_at(types, path).alias("vs"))
+            for i, path in enumerate(positions)
+        ]))
+    ).select("p", F.explode("vs").alias("v"))
+
+    def child(kind: int, key: Column, x: Column) -> Column:
+        return F.struct(F.lit(kind).alias("kind"), key.alias("key"), x.alias("v"))
+
+    # each value itself (kind 0), each element of its array branch (1)
+    # and each key of its object branch (2)
+    nokey = F.lit(None).cast("string")
+    v = F.col("v")
+    elems = F.try_variant_get(v, "$", "array<variant>")
+    fields = F.map_entries(F.try_variant_get(v, "$", "map<string,variant>"))
+    children = _flat(F.array(
+        F.array(child(0, nokey, v)),
+        F.transform(elems, lambda e: child(1, nokey, e)),
+        F.transform(fields, lambda kv: child(2, kv["key"], kv["value"])),
+    ))
+    sov = F.schema_of_variant("v")
+    cls = (
+        F.when(sov.startswith("ARRAY"), F.lit("arr"))
+        .when(sov.startswith("OBJECT"), F.lit("obj"))
+        .otherwise(ref_tag_from_schema_str(sov))
+    )
+    is_obj = F.col("cls") == "obj"
+    rows = (
+        pv.select("p", F.inline(children))
+        .select("p", "kind", "key", "v", cls.alias("cls"))
+        .groupBy("p", "kind", "key")
+        .agg(
+            F.collect_set("cls").alias("cset"),
+            F.schema_of_variant_agg(F.when(is_obj, F.col("v"))).alias("os"),
+        )
+        .collect()
+    )
+    out = {path: (set(), None) for path in positions}
+    for r in rows:
+        step = ((), (_EACH,), (r["key"],))[r["kind"]]
+        obj = parse_variant_schema(r["os"]) if r["os"] else None
+        out[positions[r["p"]] + step] = (set(r["cset"]), obj)
+    for path in positions:
+        # an array branch whose arrays are all empty has no elements
+        out.setdefault(path + (_EACH,), (set(), None))
+    return out
+
+
+def _position_stats(df: DataFrame) -> dict[tuple, tuple]:
+    """Class set and merged object-branch schema of every VARIANT
+    position planning will meet, keyed by JSON path.
+
+    A VARIANT position is a path in the JSON tree (struct fields and
+    array elements at any depth) whose type is VARIANT: where the
+    corpus-wide schema merge conflicted or saw a fractional number
+    (sources/jsonl.py:_cast_ddl), and, once their stats are known,
+    the positions inside a VARIANT position's array and object
+    branches. One round (``_stats_round``) reads every position off
+    ``df`` itself — never off a per-table lineage, so the plan does
+    not grow with the table count — and looks one level ahead; a
+    further round runs only for positions the lookahead still missed
+    (a conflict inside a conflicted branch). Planning itself then
+    runs no Spark action."""
+    roots = [p for f in df.schema.fields for p in _type_positions(f.dataType, (f.name,))]
+    stats: dict[tuple, tuple] = {}
+    todo = roots
+    while todo:
+        stats.update(_stats_round(df, todo))
+        todo = list(dict.fromkeys(m for p in roots for m in _missing(p, stats)))
+    return stats
+
+
 def _expand_variants(
-    tdf: DataFrame,
-    precomputed: dict[str, tuple[set, str | None]] | None = None,
-) -> tuple[DataFrame, dict[str, bool], dict[str, set]]:
+    tdf: DataFrame, paths: dict[str, tuple], stats: dict[tuple, tuple]
+) -> tuple[DataFrame, dict[str, tuple], dict[str, bool], dict[str, set]]:
     """Per-row dynamic typing for VARIANT columns — the reference's
     row-walk semantics (reference relationalize.py:48-119) recovered
     on top of plan-time relationalize.
@@ -128,10 +304,10 @@ def _expand_variants(
     conflicted (e.g. ``b`` is a list in one row, a scalar in another,
     an object in a third). The reference handles that per row; a
     static plan cannot — unless the plan itself is derived from the
-    data. This function runs ONE combined aggregate job per nesting
-    level over all variant columns at that level, computing per
-    column: does any row hold an array / an object / a scalar, plus
-    the merged schema of the object rows only. It then
+    data. ``stats`` (``_position_stats``, keyed by each column's JSON
+    path in ``paths``) says per column whether any row holds an array,
+    an object or a scalar, and the merged schema of the object rows.
+    This function then
 
     - flattens the object branch into ``{prefix}_{field}`` columns
       (conflicted fields come back as VARIANT and are handled by the
@@ -144,6 +320,7 @@ def _expand_variants(
       the reference's winner is row-dict key order, which a set-based
       engine canonicalizes to schema order). Pinned in tests/
       test_jsonl_pipeline.py::test_dynamic_flatten_collision_last_write_wins.
+      The winner keeps its own path, so its stats are its own.
     - keeps the scalar + array branches in the original column (the
       array branch is split out by the caller's normal child-table
       machinery, elements staying VARIANT so grandchildren recurse),
@@ -151,39 +328,20 @@ def _expand_variants(
       (the reference's flatten consumes pure-object keys — no column
       remains).
 
-    Returns the expanded frame, ``{column: has_array_branch}``, and
-    ``{column: set of observed scalar reference tags}`` — the latter
-    fed forward as inference hints so ``infer_and_convert`` does not
-    re-scan for tags the branch analysis already observed (one
-    aggregate per nesting level TOTAL for the dynamic pipeline).
-
-    Scale shape: the aggregate is a scan + partial-agg (a bounded
-    ``collect_set`` over the fixed tag vocabulary per column — arrays
-    and objects classify to the constant markers ``arr``/``obj``, so
-    heterogeneous nested shapes cannot blow the set up — plus the
-    same ``schema_of_variant_agg`` the top-level pass uses for the
-    object branch) and runs only when conflicted leaves exist at this
-    level. The pipeline's persisted parsed input (sources/jsonl.py)
-    keeps these passes from re-parsing JSON.
-
-    ``precomputed`` (r12) maps first-level column names to an already
-    observed ``(class set, object-branch schema string)`` pair — the
-    dynamic JSON pipeline's fused top-level analysis job collects the
-    identical quantities per top-level key (sources/jsonl.py:
-    _analyze_top_level), so columns named by it skip this function's
-    aggregate. It applies to the FIRST loop iteration only (deeper
-    iterations see flatten-generated names the top-level pass cannot
-    observe); a first-iteration column missing from it still goes
-    through the aggregate.
+    Returns the expanded frame and its paths, ``{column:
+    has_array_branch}``, and ``{column: set of observed scalar
+    reference tags}`` — the latter fed forward as inference hints so
+    ``infer_and_convert`` does not re-scan for tags the stats already
+    hold.
     """
-    from ..sources.jsonl import _cast_ddl, parse_variant_schema
-    from .infer import ref_tag_from_schema_str
+    from ..sources.jsonl import _cast_ddl
 
     arr_flags: dict[str, bool] = {}
     tag_sets: dict[str, set[str]] = {}
     analyzed: set[str] = set()
+    obj_tmp: dict[str, str] = {}  # tmp struct col -> flatten prefix
     while True:
-        tdf = _flatten_structs(tdf)
+        tdf, paths = _flatten_structs(tdf, paths, obj_tmp)
         vcols = [
             f.name
             for f in tdf.schema.fields
@@ -192,85 +350,31 @@ def _expand_variants(
             and f.name not in analyzed
         ]
         if not vcols:
-            return tdf, arr_flags, tag_sets
-        # class-set + object-branch schema per column: from the fused
-        # top-level analysis when available (first iteration), else
-        # one combined aggregate job over the remaining columns.
-        per_col: dict[str, tuple[set, str | None]] = {}
-        need = list(vcols)
-        if precomputed:
-            per_col = {c: precomputed[c] for c in vcols if c in precomputed}
-            need = [c for c in vcols if c not in per_col]
-            precomputed = None  # first iteration only
-        if need:
-            # one projected class per column (schema_of_variant computed
-            # once per row), then one combined aggregate
-            cls_cols = {}
-            proj = [F.col(_q(f.name)) for f in tdf.schema.fields]
-            for i, c in enumerate(need):
-                sov = F.schema_of_variant(F.col(_q(c)))
-                cls = (
-                    F.when(sov.startswith("ARRAY"), F.lit("arr"))
-                    .when(sov.startswith("OBJECT"), F.lit("obj"))
-                    .otherwise(ref_tag_from_schema_str(sov))
-                )
-                cls_cols[c] = f"__cls{DELIM}{i}__"
-                proj.append(cls.alias(cls_cols[c]))
-            classed = tdf.select(*proj)
-            aggs = []
-            for i, c in enumerate(need):
-                aggs.append(F.collect_set(cls_cols[c]).alias(f"__set{i}__"))
-                aggs.append(
-                    F.schema_of_variant_agg(
-                        F.when(F.col(cls_cols[c]) == "obj", F.col(_q(c)))
-                    ).alias(f"__os{i}__")
-                )
-            stats = classed.agg(*aggs).first()
-            for i, c in enumerate(need):
-                per_col[c] = (set(stats[f"__set{i}__"] or []), stats[f"__os{i}__"])
-
+            return tdf, paths, arr_flags, tag_sets
         keep: dict[str, Column] = {}
-        obj_tmp: dict[str, str] = {}  # tmp struct col -> flatten prefix
+        keep_paths: dict[str, tuple] = {}
+        obj_tmp = {}
         idx = {c: i for i, c in enumerate(vcols)}
         for f in tdf.schema.fields:
             c = f.name
             if c not in idx:
-                keep[c] = F.col(_q(c))
+                keep[c], keep_paths[c] = F.col(_q(c)), paths.get(c)
                 continue
-            i = idx[c]
-            observed = set(per_col[c][0])
-            any_arr = "arr" in observed
-            any_obj = "obj" in observed
+            observed, obj = stats[paths[c]]
             scalars = observed - {"arr", "obj"}
-            any_scalar = bool(scalars)
             tag_sets[c] = scalars
             analyzed.add(c)
-            if any_arr or any_scalar:
+            if "arr" in observed or scalars:
                 # strip the object branch; arrays/scalars stay put
-                keep[c] = F.when(~_is_obj(c), F.col(_q(c)))
-                arr_flags[c] = any_arr
-            if any_obj:
-                node = parse_variant_schema(per_col[c][1])
-                if node.kind == "object" and node.fields:
-                    tmp = f"__vobj{DELIM}{i}__"
-                    keep[tmp] = F.try_variant_get(
-                        F.col(_q(c)), "$", _cast_ddl(node)
-                    )
-                    obj_tmp[tmp] = _obj_prefix(c)
+                keep[c], keep_paths[c] = F.when(~_is_obj(c), F.col(_q(c))), paths[c]
+                arr_flags[c] = "arr" in observed
+            if "obj" in observed and obj.kind == "object" and obj.fields:
+                tmp = f"__vobj{DELIM}{idx[c]}__"
+                keep[tmp] = F.try_variant_get(F.col(_q(c)), "$", _cast_ddl(obj))
+                keep_paths[tmp] = paths[c]
+                obj_tmp[tmp] = _obj_prefix(c)
         tdf = tdf.select(*[col.alias(n) for n, col in keep.items()])
-        if obj_tmp:
-            cols: dict[str, Column] = {}
-            for f in tdf.schema.fields:
-                if f.name in obj_tmp:
-                    prefix = obj_tmp[f.name]
-                    for sub in f.dataType.fields:  # type: ignore[union-attr]
-                        flat = f"{prefix}{DELIM}{sub.name}"
-                        cols[flat] = F.col(
-                            f"{_q(f.name)}.{_q(sub.name)}"
-                        ).alias(flat)
-                else:
-                    cols[f.name] = F.col(_q(f.name))
-            tdf = tdf.select(*[c.alias(n) for n, c in cols.items()])
+        paths = keep_paths
 
 
 def relationalize(
@@ -281,8 +385,6 @@ def relationalize(
     rid_mode: Literal["hash", "uuid"] = "hash",
     max_depth: int = 24,
     infer_hints: dict | None = None,
-    variant_stats: dict[str, tuple[set, str | None]] | None = None,
-    variant_elem_stats: dict[str, tuple[set, str | None]] | None = None,
 ) -> dict[str, DataFrame]:
     """Flatten ``df`` into a dict of flat DataFrames keyed by table name.
 
@@ -299,21 +401,26 @@ def relationalize(
     max_depth: guard on schema nesting depth.
     infer_hints: optional caller-provided dict, filled with
         ``{table: {column: normalized tag}}`` for variant columns
-        whose observed tags the per-level branch analysis already
-        collected — feed to ``infer_and_convert(tag_hints=...)`` to
-        skip its per-table tag scan (tables assembled by multi-parent
-        union are omitted; they fall back to the scan).
+        whose observed tags the position stats already hold — feed
+        to ``infer_and_convert(tag_hints=...)`` to skip its per-table
+        tag scan (tables assembled by multi-parent union are omitted;
+        they fall back to the scan).
+
+    A frame with VARIANT columns costs one eager stats action over
+    ``df`` before planning (``_position_stats``; a second only for a
+    conflict inside a conflicted branch); a typed frame costs none.
     """
     if key_cols:
         row_key = F.to_json(F.struct(*[F.col(_q(c)) for c in key_cols]))
     else:
         row_key = F.to_json(F.struct(*[F.col(_q(c)) for c in df.columns]))
 
+    stats = _position_stats(df)
     out: dict[str, DataFrame] = {}
     hint_sets: dict[str, dict[str, set] | None] = {}
     _process(
-        df.withColumn(_ROW_KEY, row_key), name, name, rid_mode, out, max_depth,
-        hint_sets, variant_stats, variant_elem_stats,
+        df.withColumn(_ROW_KEY, row_key), {c: (c,) for c in df.columns}, stats,
+        name, name, rid_mode, out, max_depth, hint_sets,
     )
     if infer_hints is not None:
         from .. import types as T
@@ -350,30 +457,18 @@ def _union_aligned(a: DataFrame, b: DataFrame) -> DataFrame:
 
 def _process(
     tdf: DataFrame,
+    paths: dict[str, tuple],
+    stats: dict[tuple, tuple],
     table: str,
     root: str,
     rid_mode: str,
     out: dict[str, DataFrame],
     depth_left: int,
     hint_sets: dict[str, dict[str, set] | None],
-    variant_stats: dict[str, tuple[set, str | None]] | None = None,
-    variant_elem_stats: dict[str, tuple[set, str | None]] | None = None,
 ) -> None:
     if depth_left <= 0:
         raise ValueError(f"nesting exceeds max_depth while planning table {table!r}")
-    tdf, var_arr, var_tags = _expand_variants(tdf, variant_stats)
-
-    def _child_stats(p: str) -> dict[str, tuple[set, str | None]] | None:
-        """Precomputed first-iteration stats for the child table of
-        array path ``p``: the fused top-level analysis already
-        aggregated the class set / object-branch schema of ``p``'s
-        elements (its ``lvl=1`` rows), which is exactly what the
-        child's ``{p}__val_`` variant column would re-scan for. Only
-        top-level paths carry entries (the dict is consumed here and
-        not forwarded); deeper levels take the aggregate path."""
-        if variant_elem_stats is None or p not in variant_elem_stats:
-            return None
-        return {f"{p}{DELIM}{VAL}": variant_elem_stats[p]}
+    tdf, paths, var_arr, var_tags = _expand_variants(tdf, paths, stats)
 
     array_paths = [
         f.name
@@ -486,15 +581,20 @@ def _process(
             # the generated values overwrite the user's); mirror that
             # by dropping the colliding user fields rather than
             # failing analysis with an ambiguous reference.
-            elem_cols = [
-                F.col(f"{_q(_ELEM)}.{_q(sub.name)}").alias(f"{p}{DELIM}{sub.name}")
+            subs = {
+                f"{p}{DELIM}{sub.name}": sub.name
                 for sub in elem_type.fields
                 if f"{p}{DELIM}{sub.name}" not in (rid_name, index_name)
+            }
+            elem_cols = [
+                F.col(f"{_q(_ELEM)}.{_q(sub)}").alias(flat) for flat, sub in subs.items()
             ]
+            child_paths = {flat: paths[p] + (_EACH, sub) for flat, sub in subs.items()}
         else:
             # scalar or nested array element: value column {p}__val_;
             # a nested array recurses into a grandchild table.
             elem_cols = [F.col(_q(_ELEM)).alias(f"{p}{DELIM}{VAL}")]
+            child_paths = {f"{p}{DELIM}{VAL}": paths[p] + (_EACH,)}
         child = exploded.select(
             *elem_cols,
             F.col(_q(rid_name)),
@@ -502,8 +602,8 @@ def _process(
             child_key.alias(_ROW_KEY),
         )
         _process(
-            child, f"{root}{DELIM}{p}", root, rid_mode, out, depth_left - 1,
-            hint_sets, _child_stats(p),
+            child, child_paths, stats, f"{root}{DELIM}{p}", root, rid_mode, out,
+            depth_left - 1, hint_sets,
         )
 
     for p in variant_array_paths:
@@ -529,8 +629,8 @@ def _process(
             child_key.alias(_ROW_KEY),
         )
         _process(
-            child, f"{root}{DELIM}{p}", root, rid_mode, out, depth_left - 1,
-            hint_sets, _child_stats(p),
+            child, {f"{p}{DELIM}{VAL}": paths[p] + (_EACH,)}, stats,
+            f"{root}{DELIM}{p}", root, rid_mode, out, depth_left - 1, hint_sets,
         )
 
     for p in map_paths:
@@ -550,4 +650,11 @@ def _process(
             F.col(_q(index_name)),
             child_key.alias(_ROW_KEY),
         )
-        _process(child, f"{root}{DELIM}{p}", root, rid_mode, out, depth_left - 1, hint_sets)
+        child_paths = {
+            f"{p}{DELIM}{KEY}": paths[p] + (_KEYS,),
+            f"{p}{DELIM}{VAL}": paths[p] + (_EACH,),
+        }
+        _process(
+            child, child_paths, stats, f"{root}{DELIM}{p}", root, rid_mode, out,
+            depth_left - 1, hint_sets,
+        )

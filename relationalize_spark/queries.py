@@ -4748,7 +4748,8 @@ FROM m
 
 def q125_relationalize_dynamic(spark: SparkSession, sf: str) -> DataFrame:
     """Per-row dynamic relationalize (r5,
-    operators/relationalize.py:_expand_variants): the key ``v`` is an
+    operators/relationalize.py:_expand_variants, planned from one
+    path-keyed stats round, ``_position_stats``): the key ``v`` is an
     int in one row, a list in the next, an object in the third — the
     reference's row-walk semantics (reference
     relationalize/relationalize.py:48-119) on a plan-time engine.

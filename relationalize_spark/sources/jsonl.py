@@ -6,12 +6,13 @@ would unify mixed-type keys to string and lose that, so this module
 reads lines as text, parses them to VARIANT (JVM-side, type-
 preserving), computes the merged structural schema in one pass with
 ``schema_of_variant_agg``, and casts to a concrete struct in which
-conflicted or all-null leaves stay VARIANT. The existing
-:func:`relationalize` then splits out tables, and
-:func:`infer_and_convert` resolves the VARIANT leaves into choice
-columns — the full reference pipeline (relationalize -> Schema ->
-convert, reference README.md:50-95) as three Spark jobs and zero
-per-row Python.
+conflicted, all-null and fractional leaves stay VARIANT. The existing
+:func:`relationalize` then reads those VARIANT positions in one stats
+round and splits out tables, and :func:`infer_and_convert` resolves
+the VARIANT leaves into choice columns — the full reference pipeline
+(relationalize -> Schema -> convert, reference README.md:50-95) as
+two eager analysis actions, the table writes, and zero per-row
+Python.
 """
 
 from __future__ import annotations
@@ -156,121 +157,6 @@ def merged_variant_schema(df: DataFrame, column: str = "v") -> VNode:
     return parse_variant_schema(merged)
 
 
-#: sentinel key injected for rows whose top level is not an object (and
-#: not VOID / SQL NULL, which the global schema merge absorbs): its
-#: presence in the grouped analysis routes the corpus to the legacy
-#: whole-object merge for the exact error. The leading NUL cannot come
-#: out of ordinary data without colliding ONLY into that fallback.
-_NONOBJECT_KEY = "\x00__nonobject__"
-_NONOBJECT_JSON = '{"\\u0000__nonobject__": null}'
-
-
-def _analyze_top_level(
-    df: DataFrame, column: str = "v"
-) -> tuple[
-    VNode,
-    dict[str, tuple[set, str | None]] | None,
-    dict[str, tuple[set, str | None]] | None,
-]:
-    """ONE eager job for the dynamic pipeline's whole top-level
-    analysis (r12; guide §2.4 — don't run two jobs where one
-    suffices): ``variant_explode`` enumerates every row's top-level
-    fields and a single grouped aggregation computes, per key,
-
-    - the merged value schema (``schema_of_variant_agg`` over exactly
-      the values the whole-object merge folds for that field — absent
-      fields contribute nothing in both formulations, so the per-key
-      merge IS the global merge's field type),
-    - the observed class set (arr / obj / scalar reference tags) and
-      the object-branch merged schema — precisely what
-      ``_expand_variants`` would re-scan for at nesting level 1,
-    - (level 2, same job) the identical class-set/object-schema pair
-      for the ELEMENTS of array-classed values, grouped under
-      ``lvl=1`` — what each first-level array child table's
-      ``{key}__val_`` variant column would otherwise re-scan for.
-      The ``(lvl, key)`` grouping key keeps the two levels apart
-      structurally (no name mangling, no collision risk).
-
-    This replaces the sequential driver-blocking jobs the pipeline
-    used to run (whole-object ``schema_of_variant_agg``, the level-1
-    branch analysis over the cast frame, and one branch analysis per
-    first-level array child table): one pass over the parse, at any
-    scale.
-
-    The reassembled tree lists fields in UTF-16 code-unit order —
-    ``schema_of_variant_agg``'s own field ordering (Java string sort;
-    verified against OBJECT merges containing non-BMP keys) — so the
-    cast DDL, and therefore every downstream column order, is
-    bit-identical to the legacy path's.
-
-    Name-lookup soundness (both returned dicts are consulted by
-    COLUMN name downstream): a flattened struct-derived column can
-    collide with a plain top-level key of the same name, but every
-    struct parent generating that name is a strict PREFIX of it, and
-    prefixes sort first in the UTF-16 field order the cast DDL fixes
-    — so the plain key appears later in schema order and
-    ``_flatten_structs``' last-write-wins always keeps the PLAIN
-    key's column, which is exactly the entry these dicts hold. A
-    struct-derived name with no plain twin is simply absent from the
-    dicts and takes the aggregate path.
-
-    Degenerate corpora (any non-object top level, or zero observed
-    fields: empty/all-null/all-empty-object inputs) fall back to the
-    legacy whole-object merge so error behavior is exactly unchanged.
-    """
-    from ..operators.infer import ref_tag_from_schema_str
-
-    spark = df.sparkSession
-    col = F.col("`" + column.replace("`", "``") + "`")
-    sov = F.schema_of_variant(col)
-    # objects explode to their fields; VOID / SQL-NULL rows explode to
-    # nothing (the global merge absorbs both); anything else injects
-    # the sentinel field so the fallback (and its exact error) fires.
-    keep = sov.isNull() | sov.startswith("OBJECT") | (sov == "VOID")
-    w = F.when(keep, col).otherwise(F.parse_json(F.lit(_NONOBJECT_JSON)))
-    kv = (
-        df.select(w.alias("__w__"))
-        .lateralJoin(spark.tvf.variant_explode(F.col("__w__").outer()))
-        .select("key", "value")
-    )
-    sval = F.schema_of_variant("value")
-    lvl0 = kv.select(F.lit(0).alias("lvl"), "key", "value")
-    elems = (
-        kv.where(sval.startswith("ARRAY"))
-        .select(F.col("key").alias("__k__"), F.col("value").alias("__a__"))
-        .lateralJoin(spark.tvf.variant_explode(F.col("__a__").outer()))
-        .select(F.lit(1).alias("lvl"), F.col("__k__").alias("key"), "value")
-    )
-    cls = (
-        F.when(F.schema_of_variant("value").startswith("ARRAY"), F.lit("arr"))
-        .when(F.schema_of_variant("value").startswith("OBJECT"), F.lit("obj"))
-        .otherwise(ref_tag_from_schema_str(F.schema_of_variant("value")))
-    )
-    rows = (
-        lvl0.unionByName(elems)
-        .groupBy("lvl", "key")
-        .agg(
-            F.schema_of_variant_agg("value").alias("vs"),
-            F.collect_set(cls).alias("cset"),
-            F.schema_of_variant_agg(F.when(cls == "obj", F.col("value"))).alias(
-                "os"
-            ),
-        )
-        .collect()
-    )
-    fields = [r for r in rows if r["lvl"] == 0]
-    if not fields or any(r["key"] == _NONOBJECT_KEY for r in fields):
-        return merged_variant_schema(df, column), None, None
-    tree = VNode("object")
-    for r in sorted(fields, key=lambda r: r["key"].encode("utf-16-be")):
-        tree.fields[r["key"]] = parse_variant_schema(r["vs"])
-    stats = {r["key"]: (set(r["cset"] or []), r["os"]) for r in fields}
-    elem_stats = {
-        r["key"]: (set(r["cset"] or []), r["os"]) for r in rows if r["lvl"] == 1
-    }
-    return tree, stats, elem_stats
-
-
 @dataclass
 class RelationalizedJson:
     """Output of the end-to-end dynamic pipeline: one flat, converted
@@ -307,13 +193,15 @@ def relationalize_json(
     """Full dynamic pipeline: JSONL path (or variant DataFrame) ->
     rid-linked flat tables with choice columns resolved.
 
-    Jobs: ONE scan computes the merged schema, the top-level
-    choice/branch tags AND the first-level array children's element
-    tags together (``_analyze_top_level``, r12); deeper nesting
-    levels and deeper child tables pay one further scan per level
-    (skipped when a table has no conflicted leaves and ``convert``
-    handling is trivial). All per-row work is JVM-side variant casts
-    and projections.
+    Jobs: two eager actions. One whole-object merge
+    (``merged_variant_schema``) fixes the typed cast, and one
+    ``relationalize`` stats round over the typed frame reads every
+    VARIANT position it leaves — class set, object-branch schema and
+    scalar tags, keyed by JSON path (operators/relationalize.py:
+    _position_stats); only a conflict inside a conflicted branch adds
+    a further round. Planning the tables runs no action, and the
+    stats' tags make ``infer_and_convert`` scan-free. All per-row work
+    is JVM-side variant casts and projections.
 
     The pipeline is inherently multi-pass (schema union needs every
     row before the typed cast exists — same reason the reference
@@ -341,7 +229,7 @@ def relationalize_json(
         cached = vdf
 
     [vcol] = vdf.columns
-    tree, level1_stats, elem_stats = _analyze_top_level(vdf, vcol)
+    tree = merged_variant_schema(vdf, vcol)
     if tree.kind != "object":
         raise ValueError(
             f"top-level JSON must be objects, got {tree.kind} ({tree.leaf_type})"
@@ -360,8 +248,7 @@ def relationalize_json(
 
         hints: dict[str, dict[str, str]] = {}
         raw_tables = relationalize(
-            typed, name, key_cols=key_cols, rid_mode=rid_mode, infer_hints=hints,
-            variant_stats=level1_stats, variant_elem_stats=elem_stats,
+            typed, name, key_cols=key_cols, rid_mode=rid_mode, infer_hints=hints
         )
         tables: dict[str, DataFrame] = {}
         schemas: dict[str, Schema] = {}

@@ -158,7 +158,8 @@ def relationalize_stream(
     caller picks trigger/checkpoint options.
 
     VARIANT columns are rejected loudly: the dynamic relationalize
-    plan is derived from each batch's DATA (_expand_variants), so two
+    plan is derived from each batch's DATA (the position stats of
+    operators/relationalize.py:_position_stats), so two
     micro-batches can resolve a conflicted key to different branch
     sets and write divergent child-table schemas into the same sink
     path. Dynamic streams go through ``JsonStreamDemux``, which
@@ -232,8 +233,9 @@ class JsonStreamDemux:
     view.
 
     Scale shape: per batch this is the batch pipeline (variant casts
-    and projections, one branch-analysis aggregate per nesting level
-    over the persisted batch parse); the running schemas are
+    and projections after two analysis actions over the persisted
+    batch parse: the whole-object merge and one path-keyed stats
+    round); the running schemas are
     driver-side dicts of column tags — O(columns), not O(rows) — and
     the per-batch persistence is one tiny metadata file per table.
 

@@ -332,9 +332,12 @@ def gen_wide_corpus(seed: int, n: int) -> list[dict]:
     """200-400 objects, 20+ sibling array paths, every key conflicted
     — the corpus SHAPE that made the r6 fused branch-analysis blow its
     driver heap (many sibling child tables at one nesting level, every
-    column variant). Small enough to run in ~1 min: the pre-commit
-    gate for any relationalize/_expand_variants change, where the
-    1200-object case (~5 min) is the per-round deep check."""
+    column variant). Small enough to run in ~1 min against the
+    reference, where the 1200-object case (~5 min) is the per-round
+    deep check. Without the reference, tests/test_parity_lock.py
+    locks this corpus's output (seed 20260815, 250 objects) and is
+    the gate for any change to relationalize's analysis or
+    _expand_variants."""
     rng = random.Random(seed)
     corpus = []
     for i in range(n):

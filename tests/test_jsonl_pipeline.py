@@ -3,7 +3,9 @@ inference, conversion — mirroring the reference's README/mock-LMS
 scenarios (FIXTURES.md §B/§C)."""
 
 import json
+import os
 
+import pyspark
 import pytest
 from pyspark.sql import functions as F
 
@@ -181,25 +183,48 @@ def test_mixed_array_elements_choice_via_fused_analysis(spark):
     assert parent[1]["v_str"] and parent[1]["v_str"].startswith("R_")
 
 
-def test_fused_analysis_job_count(spark):
-    """r12 (guide §2.4): the dynamic pipeline's analysis for a
-    two-level corpus (conflicted top-level key + array child with
-    uniform elements) is ONE eager action — the fused
-    variant_explode + groupBy(lvl, key) pass. Pin the action count by
-    callsite so a regression back to per-level scans is loud. (AQE
-    splits one action into several jobs, so jobs are grouped by their
-    stage callsites here.)"""
-    df = vdf(
-        spark,
+@pytest.mark.parametrize(
+    "objs",
+    [
+        # conflicted top-level key + array child with uniform elements
+        [{"k": 1, "v": 10}, {"k": 2, "v": [1, 2]}, {"k": 3, "v": {"a": 1, "b": "p"}}],
+        # bulk shape: struct-derived conflict (cust.tier) + fractional
+        # element field (items[].price), three levels deep
         [
-            {"k": 1, "v": 10},
-            {"k": 2, "v": [1, 2]},
-            {"k": 3, "v": {"a": 1, "b": "p"}},
+            {"id": 1, "cust": {"tier": 1}, "items": [{"price": 1.5, "tags": ["a"]}]},
+            {"id": 2, "cust": {"tier": "gold"}, "items": [{"price": 2.25, "tags": []}]},
         ],
-    )
+    ],
+    ids=["conflicted_key", "bulk_shape"],
+)
+def test_analysis_is_merge_plus_one_stats_round(spark, objs, monkeypatch):
+    """The dynamic pipeline's analysis is TWO eager actions: the
+    whole-object merge (sources/jsonl.py) and one path-keyed stats
+    round (operators/relationalize.py), with no per-level aggregate
+    after them. Actions are counted at ``DataFrame.collect`` (which
+    ``first``/``head`` also reach) by their first caller outside
+    pyspark, and every Spark job the build launches must come from
+    one of those actions (AQE splits one action into several jobs)."""
+    import traceback
+
+    df = vdf(spark, objs)
+    pyspark_dir = os.path.dirname(pyspark.__file__)
+    callers = []
+    collect = type(df).collect
+
+    def counting_collect(self):
+        frame = next(
+            f for f in reversed(traceback.extract_stack()[:-1])
+            if not f.filename.startswith(pyspark_dir)
+        )
+        callers.append(os.path.basename(frame.filename))
+        return collect(self)
+
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
+    monkeypatch.setattr(type(df), "collect", counting_collect)
     relationalize_json(df, "root", convert=False)
+    monkeypatch.undo()
     after = set(tracker.getJobIdsForGroup(None))
     sites = set()
     for jid in after - before:
@@ -208,10 +233,10 @@ def test_fused_analysis_job_count(spark):
             si = tracker.getStageInfo(sid)
             if si:
                 sites.add(si.name.split("\n")[0])
-    # every job of the build belongs to the single fused collect in
-    # sources/jsonl.py — no relationalize.py aggregate ran
-    assert sites, "expected at least one analysis job"
-    assert all("jsonl.py" in s for s in sites), sites
+    assert callers == ["jsonl.py", "relationalize.py"], callers
+    # every job came from a counted action (Spark names its stages
+    # after the counting wrapper, the first frame outside pyspark)
+    assert sites and all(__file__ in s for s in sites), sites
 
 
 def test_none_lattice_through_pipeline(spark):
