@@ -6,13 +6,12 @@ A. Per-batch latency vs discovered-table count: the same wide-dynamic
    fed through process_batch repeatedly, vs a narrow 3-table corpus —
    separates the per-table driver floor (Catalyst analysis + one write
    job + one schema-file write per table) from per-row cost.
-B. finalize dedup A/B at 1x / 100x line counts: no-dedup scan vs
+B. Read-side line dedup A/B (the digest key ``read_quarantine``
+   uses) at 1x / 100x line counts: no-dedup scan vs
    full-line-key dropDuplicates (the pre-r8 shape) vs digest-key
    (xxhash64+md5) dedup, on short (~60 B) lines.
 C. The same dedup-key A/B on document-scale (~330 B) lines, cold and
    warm — where the digest key wins ~2x.
-D. exactly_once batch-dir layout vs flat+dedup_replays at 100x:
-   batch write, worst-case full replay, and finalize cost.
 E. Schema-stable ``_schema.json`` write skip: steady-state batches on
    the wide corpus with the fast path on vs forced off.
 
@@ -56,7 +55,7 @@ def main() -> None:
     ]
     for label, lines in (("narrow", narrow_lines), ("wide", wide_lines)):
         base = os.path.join(work, f"a_{label}")
-        demux = JsonStreamDemux(base, "root", key_cols=None, exactly_once=False)
+        demux = JsonStreamDemux(base, "root", key_cols=None)
         batch = spark.createDataFrame([(ln,) for ln in lines], "value string")
         times = []
         for b in range(4):
@@ -74,7 +73,7 @@ def main() -> None:
             f"-> {steady / n_tables * 1000:.0f} ms/table"
         )
 
-    # ---- B. finalize dedup A/B at 1x / 100x -----------------------------
+    # ---- B. read-side dedup A/B at 1x / 100x ----------------------------
     # corpus: q130-shaped dynamic JSONL lines derived from orders sf0.01
     from relationalize_spark.sources.tables import load_table
 
@@ -190,43 +189,13 @@ def main() -> None:
             f"C long-lines rep{rep}: full-line={t_full}s digest={t_digest}s"
         )
 
-    # ---- D. exactly_once layout vs flat+dedup, 100x, batch + replay -----
-    for eo in (False, True):
-        base = os.path.join(work, f"d_eo{eo}")
-        demux = JsonStreamDemux(base, "dyn", key_cols=["k"], exactly_once=eo)
-        src100 = os.path.join(work, "b_flat_100x")
-        batch = spark.read.text(src100)
-        tb = timed(lambda: demux.process_batch(batch, 0))
-        tb2 = timed(lambda: demux.process_batch(batch, 0))  # replay
-        if eo:
-            tf = timed(
-                lambda: [
-                    df.write.format("noop").mode("overwrite").save()
-                    for df in demux.finalize(spark).values()
-                ]
-            )
-            mode = "finalize(no-dedup-needed)"
-        else:
-            tf = timed(
-                lambda: [
-                    df.write.format("noop").mode("overwrite").save()
-                    for df in demux.finalize(
-                        spark, dedup_replays=True
-                    ).values()
-                ]
-            )
-            mode = "finalize(dedup_replays)"
-        print(
-            f"D exactly_once={eo}: batch={tb}s replay={tb2}s {mode}={tf}s"
-        )
-
     # ---- E. schema-stable write skip A/B (r10, verdict item 5) ----------
     # Steady-state batches on the wide corpus with the _schema.json
     # fast path ON (default) vs forced OFF (clearing the written-set
     # before each batch forces every table's rewrite — the pre-r10
     # behavior). Same session, same corpus, same instance shape.
     base = os.path.join(work, "e_skip")
-    demux = JsonStreamDemux(base, "root", key_cols=None, exactly_once=False)
+    demux = JsonStreamDemux(base, "root", key_cols=None)
     batch = spark.createDataFrame([(ln,) for ln in wide_lines], "value string")
     demux.process_batch(batch, 0)  # discovery
     n_tables = len(demux.schemas)

@@ -23,6 +23,7 @@ from pyspark.sql import types as ST
 
 from .. import types as T
 from ..schema import Schema
+from .relationalize import _q
 
 #: Spark DataType -> reference tag
 _SPARK_TYPE_TAGS: dict[type, str] = {
@@ -101,7 +102,7 @@ def observed_variant_tags(df: DataFrame, cols: list[str]) -> dict[str, str]:
     if not cols:
         return {}
     aggs = [
-        F.collect_set(ref_tag_expr(F.col("`" + c.replace("`", "``") + "`"))).alias(c)
+        F.collect_set(ref_tag_expr(F.col(_q(c)))).alias(c)
         for c in cols
     ]
     row = df.agg(*aggs).collect()[0]
@@ -125,10 +126,10 @@ def convert_choice_columns(
     for f in df.schema.fields:
         name = f.name
         if not isinstance(f.dataType, ST.VariantType):
-            projections.append(F.col("`" + name.replace("`", "``") + "`"))
+            projections.append(F.col(_q(name)))
             continue
         tag = members_by_col.get(name, T.NONE)
-        col = F.col("`" + name.replace("`", "``") + "`")
+        col = F.col(_q(name))
         if tag == T.NONE:
             projections.append(F.lit(None).cast("boolean").alias(name))
             continue

@@ -4,7 +4,7 @@ Spark-first re-expression of the reference transform (reference
 relationalize/relationalize.py:48-130). The reference walks *rows*
 recursively in Python; here we walk the *schema* at plan time and emit
 one declarative plan per output table — pure column projections plus
-``posexplode`` — so Catalyst/Tungsten own execution, predicate
+one positional explode — so Catalyst/Tungsten own execution, predicate
 pushdown, and whole-stage codegen, and no Python runs per row.
 
 Semantics preserved (verified against reference test cases, see
@@ -17,8 +17,8 @@ tests/test_relationalize.py):
   (0-based position) and, for scalar/array elements, ``{p}__val_``
   (reference relationalize.py:82-93, 9-13).
 - the parent cell is replaced by the generated rid; an *empty* array
-  keeps its rid with zero child rows (``posexplode``, not
-  ``posexplode_outer`` — reference relationalize.py:104-111), while a
+  keeps its rid with zero child rows (an inner positional explode,
+  not the outer one — reference relationalize.py:104-111), while a
   *null* array yields a null parent cell and no child rows.
 - arrays of arrays chain through ``__val_`` paths into grandchild
   tables (reference test/relationalize.test.py:111-184).
@@ -65,6 +65,8 @@ KEY = f"{DELIM}key{DELIM}"      # column suffix: {path}__key_ (maps)
 
 _ROW_KEY = "__relationalize_row_key__"
 _ELEM = "__relationalize_elem__"
+#: guard on nesting depth: the deepest chain of child tables planned
+_MAX_DEPTH = 24
 
 
 def _q(name: str) -> str:
@@ -383,7 +385,6 @@ def relationalize(
     *,
     key_cols: Sequence[str] | None = None,
     rid_mode: Literal["hash", "uuid"] = "hash",
-    max_depth: int = 24,
     infer_hints: dict | None = None,
 ) -> dict[str, DataFrame]:
     """Flatten ``df`` into a dict of flat DataFrames keyed by table name.
@@ -398,7 +399,6 @@ def relationalize(
         rids (children join to both); pass a real key at scale.
     rid_mode: ``"hash"`` (deterministic, default) or ``"uuid"``
         (reference-exact randomness; forces a cache of each level).
-    max_depth: guard on schema nesting depth.
     infer_hints: optional caller-provided dict, filled with
         ``{table: {column: normalized tag}}`` for variant columns
         whose observed tags the position stats already hold — feed
@@ -409,6 +409,8 @@ def relationalize(
     A frame with VARIANT columns costs one eager stats action over
     ``df`` before planning (``_position_stats``; a second only for a
     conflict inside a conflicted branch); a typed frame costs none.
+    A chain of child tables deeper than ``_MAX_DEPTH`` (24) raises
+    ``ValueError``.
     """
     if key_cols:
         row_key = F.to_json(F.struct(*[F.col(_q(c)) for c in key_cols]))
@@ -420,7 +422,7 @@ def relationalize(
     hint_sets: dict[str, dict[str, set] | None] = {}
     _process(
         df.withColumn(_ROW_KEY, row_key), {c: (c,) for c in df.columns}, stats,
-        name, name, rid_mode, out, max_depth, hint_sets,
+        name, name, rid_mode, out, _MAX_DEPTH, hint_sets,
     )
     if infer_hints is not None:
         from .. import types as T
@@ -467,46 +469,47 @@ def _process(
     hint_sets: dict[str, dict[str, set] | None],
 ) -> None:
     if depth_left <= 0:
-        raise ValueError(f"nesting exceeds max_depth while planning table {table!r}")
+        raise ValueError(
+            f"nesting exceeds {_MAX_DEPTH} levels while planning table {table!r}"
+        )
     tdf, paths, var_arr, var_tags = _expand_variants(tdf, paths, stats)
+    types = {f.name: f.dataType for f in tdf.schema.fields if f.name != _ROW_KEY}
 
-    array_paths = [
-        f.name
-        for f in tdf.schema.fields
-        if isinstance(f.dataType, ArrayType) and f.name != _ROW_KEY
-    ]
-    # VARIANT columns whose rows include arrays: per-row dynamic
-    # split-out (the reference's row-walk — a key can be a list in one
-    # row and a scalar in another; the scalar rows keep their value,
-    # the list rows get a rid into the child table).
-    variant_array_paths = [c for c, has_arr in var_arr.items() if has_arr]
-    # Spark-native extension (the reference's JSON model has no maps):
-    # a MapType column — the dynamic-keys object — splits out exactly
-    # like an array, into a child table of (rid, index, key, value)
-    # rows via map_entries. Nested struct/array/map VALUES keep
-    # recursing through the normal machinery.
-    map_paths = [
-        f.name
-        for f in tdf.schema.fields
-        if isinstance(f.dataType, MapType) and f.name != _ROW_KEY
-    ]
-    link_paths = array_paths + map_paths + variant_array_paths
+    # Every link path splits out into a child table: {p: (has_rid,
+    # exploded)}, in emission order — typed arrays, then VARIANT
+    # columns whose rows include arrays (per-row dynamic split-out,
+    # the reference's row-walk: a key can be a list in one row and a
+    # scalar in another; the scalar rows keep their value, the list
+    # rows get a rid into the child table), then maps (Spark-native
+    # extension, the reference's JSON model has none: the dynamic-keys
+    # object splits out into (rid, index, key, value) rows via
+    # map_entries). Nested struct/array/map values keep recursing.
+    links: dict[str, tuple[Column, Column]] = {}
+    for p, dt in types.items():
+        if isinstance(dt, ArrayType):
+            links[p] = (F.col(_q(p)).isNotNull(), F.col(_q(p)))
+    for p, has_arr in var_arr.items():
+        if has_arr:
+            arr = F.try_variant_get(F.col(_q(p)), "$", "array<variant>")
+            links[p] = (_is_arr(p), arr)
+    for p, dt in types.items():
+        if isinstance(dt, MapType):
+            links[p] = (F.col(_q(p)).isNotNull(), F.map_entries(F.col(_q(p))))
 
-    # Materialize one rid column per array/map path on the working
-    # frame so parent and child plans agree on the value. A variant
-    # path gets its rid only on rows where the value actually IS an
-    # array (other rows keep their scalar).
-    rid_col = {p: f"__rid{DELIM}{i}__" for i, p in enumerate(link_paths)}
-    for p in link_paths:
+    # Materialize one rid column per link path on the working frame so
+    # parent and child plans agree on the value. A variant path gets
+    # its rid only on rows where the value actually IS an array (other
+    # rows keep their scalar).
+    rid_col = {p: f"__rid{DELIM}{i}__" for i, p in enumerate(links)}
+    for p, (has_rid, _) in links.items():
         if rid_mode == "hash":
             rid = _hash_rid(table, p)
         else:
             rid = F.concat(
                 F.lit("R"), F.lit(DELIM), F.regexp_replace(F.expr("uuid()"), "-", "")
             )
-        has_rid = _is_arr(p) if p in variant_array_paths else F.col(_q(p)).isNotNull()
         tdf = tdf.withColumn(rid_col[p], F.when(has_rid, rid))
-    if rid_mode == "uuid" and link_paths:
+    if rid_mode == "uuid" and links:
         # uuid() is nondeterministic: parent and child are separate
         # actions, so pin the values once.
         tdf = tdf.cache()
@@ -515,7 +518,7 @@ def _process(
     for f in tdf.schema.fields:
         if f.name == _ROW_KEY or f.name in rid_col.values():
             continue
-        if f.name in variant_array_paths:
+        if f.name in rid_col and isinstance(f.dataType, VariantType):
             # dynamic column: list rows -> rid (as a VARIANT string so
             # the column stays one type), scalar rows keep their value
             # — the reference's row-walk output exactly; the rid later
@@ -556,104 +559,51 @@ def _process(
             if c in present
         }
 
-    for p in array_paths:
-        elem_type = next(
-            f.dataType.elementType for f in tdf.schema.fields if f.name == p
-        )
+    for p, (has_rid, arr) in links.items():
         rid_name = f"{p}{DELIM}{RID}"
         index_name = f"{p}{DELIM}{INDEX}"
-        exploded = (
-            tdf.where(F.col(_q(p)).isNotNull())
-            .select(
-                F.col(_q(rid_col[p])).alias(rid_name),
-                F.posexplode(F.col(_q(p))).alias(index_name, _ELEM),
-            )
-        )
-        child_key = F.concat_ws(
-            ":", F.col(_q(rid_name)), F.col(_q(index_name)).cast("string")
-        )
-        if isinstance(elem_type, StructType):
-            # A user field named `_rid_`/`_index_` inside a list-element
-            # dict would flatten to exactly the generated child columns
-            # (`{p}__rid_`/`{p}__index_`). The reference resolves this
-            # by mutating its injected keys INTO the element dict
-            # (reference relationalize.py:82-93 — last write wins, so
-            # the generated values overwrite the user's); mirror that
-            # by dropping the colliding user fields rather than
-            # failing analysis with an ambiguous reference.
-            subs = {
-                f"{p}{DELIM}{sub.name}": sub.name
-                for sub in elem_type.fields
-                if f"{p}{DELIM}{sub.name}" not in (rid_name, index_name)
-            }
-            elem_cols = [
-                F.col(f"{_q(_ELEM)}.{_q(sub)}").alias(flat) for flat, sub in subs.items()
-            ]
-            child_paths = {flat: paths[p] + (_EACH, sub) for flat, sub in subs.items()}
+        # element columns {suffix: (field of the exploded element, path
+        # step)}: a map entry's key and value; a struct element's
+        # fields; otherwise — scalar, nested array (recursing into a
+        # grandchild table) or VARIANT element (the child's
+        # _expand_variants spreads its object rows per row, like the
+        # reference's recursion) — the element itself as {p}__val_.
+        dt = types[p]
+        if isinstance(dt, MapType):
+            elems = {KEY: ("key", (_KEYS,)), VAL: ("value", (_EACH,))}
+        elif isinstance(dt, ArrayType) and isinstance(dt.elementType, StructType):
+            elems = {s.name: (s.name, (_EACH, s.name)) for s in dt.elementType.fields}
         else:
-            # scalar or nested array element: value column {p}__val_;
-            # a nested array recurses into a grandchild table.
-            elem_cols = [F.col(_q(_ELEM)).alias(f"{p}{DELIM}{VAL}")]
-            child_paths = {f"{p}{DELIM}{VAL}": paths[p] + (_EACH,)}
-        child = exploded.select(
-            *elem_cols,
-            F.col(_q(rid_name)),
-            F.col(_q(index_name)),
-            child_key.alias(_ROW_KEY),
-        )
-        _process(
-            child, child_paths, stats, f"{root}{DELIM}{p}", root, rid_mode, out,
-            depth_left - 1, hint_sets,
-        )
-
-    for p in variant_array_paths:
-        rid_name = f"{p}{DELIM}{RID}"
-        index_name = f"{p}{DELIM}{INDEX}"
-        exploded = tdf.where(_is_arr(p)).select(
-            F.col(_q(rid_col[p])).alias(rid_name),
-            F.posexplode(
-                F.try_variant_get(F.col(_q(p)), "$", "array<variant>")
-            ).alias(index_name, _ELEM),
-        )
-        child_key = F.concat_ws(
-            ":", F.col(_q(rid_name)), F.col(_q(index_name)).cast("string")
-        )
-        # elements stay VARIANT: the child's _expand_variants spreads
-        # object elements into `{p}_{field}` columns and keeps
-        # scalar/array elements in `{p}__val_` — per-row, like the
-        # reference's recursion.
-        child = exploded.select(
-            F.col(_q(_ELEM)).alias(f"{p}{DELIM}{VAL}"),
-            F.col(_q(rid_name)),
-            F.col(_q(index_name)),
-            child_key.alias(_ROW_KEY),
-        )
-        _process(
-            child, {f"{p}{DELIM}{VAL}": paths[p] + (_EACH,)}, stats,
-            f"{root}{DELIM}{p}", root, rid_mode, out, depth_left - 1, hint_sets,
-        )
-
-    for p in map_paths:
-        rid_name = f"{p}{DELIM}{RID}"
-        index_name = f"{p}{DELIM}{INDEX}"
-        exploded = tdf.where(F.col(_q(p)).isNotNull()).select(
-            F.col(_q(rid_col[p])).alias(rid_name),
-            F.posexplode(F.map_entries(F.col(_q(p)))).alias(index_name, _ELEM),
-        )
-        child_key = F.concat_ws(
-            ":", F.col(_q(rid_name)), F.col(_q(index_name)).cast("string")
-        )
-        child = exploded.select(
-            F.col(f"{_q(_ELEM)}.key").alias(f"{p}{DELIM}{KEY}"),
-            F.col(f"{_q(_ELEM)}.value").alias(f"{p}{DELIM}{VAL}"),
-            F.col(_q(rid_name)),
-            F.col(_q(index_name)),
-            child_key.alias(_ROW_KEY),
-        )
-        child_paths = {
-            f"{p}{DELIM}{KEY}": paths[p] + (_KEYS,),
-            f"{p}{DELIM}{VAL}": paths[p] + (_EACH,),
+            elems = {VAL: (None, (_EACH,))}
+        # A user field named `_rid_`/`_index_` inside a list-element
+        # dict would flatten to exactly the generated child columns.
+        # The reference mutates its injected keys INTO the element dict
+        # (reference relationalize.py:82-93 — last write wins, so the
+        # generated values overwrite the user's); mirror that by
+        # dropping the colliding user fields rather than failing
+        # analysis with an ambiguous reference.
+        elems = {
+            f"{p}{DELIM}{s}": e
+            for s, e in elems.items()
+            if f"{p}{DELIM}{s}" not in (rid_name, index_name)
         }
+        exploded = tdf.where(has_rid).select(
+            F.col(_q(rid_col[p])).alias(rid_name),
+            F.posexplode(arr).alias(index_name, _ELEM),
+        )
+        child_key = F.concat_ws(
+            ":", F.col(_q(rid_name)), F.col(_q(index_name)).cast("string")
+        )
+        child = exploded.select(
+            *[
+                F.col(f"{_q(_ELEM)}.{_q(sub)}" if sub else _q(_ELEM)).alias(flat)
+                for flat, (sub, _) in elems.items()
+            ],
+            F.col(_q(rid_name)),
+            F.col(_q(index_name)),
+            child_key.alias(_ROW_KEY),
+        )
+        child_paths = {flat: paths[p] + step for flat, (_, step) in elems.items()}
         _process(
             child, child_paths, stats, f"{root}{DELIM}{p}", root, rid_mode, out,
             depth_left - 1, hint_sets,

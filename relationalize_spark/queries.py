@@ -5124,12 +5124,12 @@ def q130_stream_demux_dynamic(spark: SparkSession, sf: str) -> DataFrame:
     (reference relationalize/relationalize.py:48-119) — lands as JSONL
     files and streams through the demux in 4 REAL micro-batches
     (maxFilesPerTrigger=1, AvailableNow), each batch holding a mix of
-    all three variants so the per-batch untyped append + cross-batch
+    all three variants so the per-batch untyped landing + cross-batch
     ``Schema.merge`` (reference schema.py:259-302) is what produces
     the choice columns, not any single batch. A fresh instance then
-    REPLAYS batch 0 (worst-case at-least-once: retry after a crash
-    that lost driver state) and ``finalize(dedup_replays=True)``
-    restores exactly-once before the typed view is built. The oracle
+    REPLAYS batch 0 (the worst-case retry: after a crash that lost
+    driver state), which overwrites that batch's own directory, so
+    the typed view sees each row exactly once. The oracle
     replays everything value-level, rid strings included (hash rids
     are ``R_ + md5(table \\x1f path \\x1f row-key)``, computed
     identically in DuckDB), with child-table linkage re-aggregated
@@ -5139,6 +5139,7 @@ def q130_stream_demux_dynamic(spark: SparkSession, sf: str) -> DataFrame:
     import os
     import shutil
     import tempfile
+    import time
 
     from .streaming.relationalize_stream import JsonStreamDemux
 
@@ -5196,8 +5197,7 @@ def q130_stream_demux_dynamic(spark: SparkSession, sf: str) -> DataFrame:
     # this used to be four scan+render+coalesce(1) jobs, one per
     # file); repartition by the batch key keeps exactly one part file
     # per b= directory, and within-file line order is free to vary —
-    # every consumer (parse + keyed join, replay dedup on
-    # byte-identical lines) is order-insensitive.
+    # every consumer (parse + keyed join) is order-insensitive.
     part = os.path.join(work, "w")
     ldf.repartition(4, "b").write.mode("overwrite").partitionBy("b").text(part)
     for i in range(4):
@@ -5209,14 +5209,15 @@ def q130_stream_demux_dynamic(spark: SparkSession, sf: str) -> DataFrame:
                 f"no orders row has o_orderkey % 4 == {i}"
             )
         shutil.move(found[0], os.path.join(src, f"b{i}.txt"))
+    # the file source orders files by modification time, and the four
+    # part files got theirs from parallel tasks: pin b0..b3 to strictly
+    # increasing mtimes so micro-batch i reads b{i}.txt — the replay
+    # of b0.txt as batch 0 below must overwrite exactly that batch
+    t0 = int(time.time()) - 60
+    for i in range(4):
+        os.utime(os.path.join(src, f"b{i}.txt"), (t0 + i, t0 + i))
 
-    # flat at-least-once layout on purpose: q130 attests the replay
-    # + finalize(dedup_replays) recovery lane; the exactly_once
-    # batch-dir layout needs no dedup and is covered by unit tests +
-    # the BASELINE.md r8 A/B
-    demux = JsonStreamDemux(
-        base, "dynstream", key_cols=["k"], exactly_once=False
-    )
+    demux = JsonStreamDemux(base, "dynstream", key_cols=["k"])
     # foreachBatch demux: stateless (no watermark -> no no-data batch
     # to skip); the backlog sizing still right-sizes each micro-batch's
     # relationalize/write jobs
@@ -5232,11 +5233,9 @@ def q130_stream_demux_dynamic(spark: SparkSession, sf: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    replay = JsonStreamDemux(
-        base, "dynstream", key_cols=["k"], exactly_once=False
-    )  # restart
+    replay = JsonStreamDemux(base, "dynstream", key_cols=["k"])  # restart
     replay.process_batch(spark.read.text(os.path.join(src, "b0.txt")), 0)
-    tables = replay.finalize(spark, dedup_replays=True)
+    tables = replay.finalize(spark)
     root, child = tables["dynstream"], tables["dynstream_v"]
     stats = child.groupBy(F.col("v__rid_").alias("rid")).agg(
         F.count(F.lit(1)).alias("n_items"),

@@ -19,11 +19,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.infer import infer_and_convert
-from ..operators.relationalize import relationalize
+from ..operators.relationalize import _q, relationalize
 from ..plans.session import session_conf
 from ..schema import Schema
 
@@ -139,10 +140,7 @@ def _cast_ddl(node: VNode) -> str:
     mixed keys and a plain DOUBLE column for all-float keys — exactly
     the reference's behavior (ref schema.py:194-257)."""
     if node.kind == "object":
-        parts = []
-        for name, child in node.fields.items():
-            quoted = "`" + name.replace("`", "``") + "`"
-            parts.append(f"{quoted}: {_cast_ddl(child)}")
+        parts = [f"{_q(k)}: {_cast_ddl(child)}" for k, child in node.fields.items()]
         return "struct<" + ", ".join(parts) + ">"
     if node.kind == "array":
         return f"array<{_cast_ddl(node.element)}>"
@@ -187,7 +185,6 @@ def relationalize_json(
     spark: SparkSession | None = None,
     key_cols: list[str] | None = None,
     convert: bool = True,
-    persist: bool = True,
     rid_mode: str = "hash",
 ) -> RelationalizedJson:
     """Full dynamic pipeline: JSONL path (or variant DataFrame) ->
@@ -205,14 +202,11 @@ def relationalize_json(
 
     The pipeline is inherently multi-pass (schema union needs every
     row before the typed cast exists — same reason the reference
-    iterates the file twice, ref README.md:60-77), so by default the
+    iterates the file twice, ref README.md:60-77), so the
     parsed-variant input is persisted MEMORY_AND_DISK for the
     analysis passes and left cached for the caller's materialization:
     the JSON parse is paid once, not once per pass. Call
-    ``.unpersist()`` on the result after writing the tables, or pass
-    ``persist=False`` to trade repeated parsing for zero cache
-    footprint (the right call when the cluster is memory-tight and
-    the source is a cheap columnar scan).
+    ``.unpersist()`` on the result after writing the tables.
     """
     if isinstance(source, str):
         if spark is None:
@@ -220,13 +214,7 @@ def relationalize_json(
         vdf = read_jsonl_variant(spark, source)
     else:
         vdf = source
-
-    cached = None
-    if persist:
-        from pyspark import StorageLevel
-
-        vdf = vdf.persist(StorageLevel.MEMORY_AND_DISK)
-        cached = vdf
+    vdf = vdf.persist(StorageLevel.MEMORY_AND_DISK)
 
     [vcol] = vdf.columns
     tree = merged_variant_schema(vdf, vcol)
@@ -270,4 +258,4 @@ def relationalize_json(
                 tables[tname], schemas[tname] = tdf, infer_schema(
                     tdf, tag_hints=hints.get(tname)
                 )
-    return RelationalizedJson(tables, schemas, _cached_input=cached)
+    return RelationalizedJson(tables, schemas, _cached_input=vdf)

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..operators.relationalize import relationalize
+from ..operators.relationalize import _q, _type_positions, relationalize
 from ..plans.session import session_conf
 from ..schema import Schema
 
@@ -91,56 +91,27 @@ def _fs_read_text(spark: SparkSession, path_str: str) -> str | None:
         stm.close()
 
 
-def _fs_list_dirs(spark: SparkSession, path_str: str) -> list[str]:
+def _fs_ls(spark: SparkSession, path_str: str) -> list[tuple[str, bool]]:
+    """``(name, is_directory)`` per entry; empty for a missing path."""
     fs, p = _fs_for(spark, path_str)
     if not fs.exists(p):
         return []
-    return [s.getPath().getName() for s in fs.listStatus(p) if s.isDirectory()]
+    return [(s.getPath().getName(), s.isDirectory()) for s in fs.listStatus(p)]
+
+
+def _hidden(name: str) -> bool:
+    """``_``/``.`` prefixed — metadata, same filter Spark's readers use."""
+    return name.startswith(("_", "."))
 
 
 def _fs_has_data_files(spark: SparkSession, path_str: str) -> bool:
-    """True if the directory holds any non-hidden file (recursing into
-    subdirectories, for the per-batch exactly_once layout). Hidden =
-    ``_``/``.`` prefixed — metadata, same filter Spark's readers use."""
-    fs, p = _fs_for(spark, path_str)
-    if not fs.exists(p):
-        return False
-    for s in fs.listStatus(p):
-        name = s.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        if s.isDirectory():
-            if _fs_has_data_files(spark, f"{path_str}/{name}"):
-                return True
-        else:
-            return True
-    return False
-
-
-def _dedup_lines(df: DataFrame, col: str = "value") -> DataFrame:
-    """Drop byte-identical lines keyed on a 192-bit digest pair
-    (xxhash64 + md5): shuffle comparisons touch 24-byte keys instead
-    of whole documents, and collision across BOTH digests is ~2^-96 —
-    negligible against corpus sizes. One definition so the table-side
-    (finalize) and quarantine-side replays can never drift apart."""
-    return (
-        df.withColumn("__d1__", F.xxhash64(col))
-        .withColumn("__d2__", F.md5(col))
-        .dropDuplicates(["__d1__", "__d2__"])
-        .drop("__d1__", "__d2__")
+    """True if the directory holds any non-hidden file, recursing into
+    subdirectories (the per-batch ``batch=<n>`` layout)."""
+    return any(
+        not _hidden(name)
+        and (not is_dir or _fs_has_data_files(spark, f"{path_str}/{name}"))
+        for name, is_dir in _fs_ls(spark, path_str)
     )
-
-
-def _has_variant(dt: ST.DataType) -> bool:
-    if isinstance(dt, ST.VariantType):
-        return True
-    if isinstance(dt, ST.StructType):
-        return any(_has_variant(f.dataType) for f in dt.fields)
-    if isinstance(dt, ST.ArrayType):
-        return _has_variant(dt.elementType)
-    if isinstance(dt, ST.MapType):
-        return _has_variant(dt.valueType)
-    return False
 
 
 def relationalize_stream(
@@ -163,11 +134,16 @@ def relationalize_stream(
     micro-batches can resolve a conflicted key to different branch
     sets and write divergent child-table schemas into the same sink
     path. Dynamic streams go through ``JsonStreamDemux``, which
-    appends untyped rows (the reference's single-pass append,
+    lands untyped rows per batch (the reference's single-pass append,
     reference relationalize.py:57-80) and aligns the typed view to a
     running merged schema at finalize.
     """
-    bad = [f.name for f in stream_df.schema.fields if _has_variant(f.dataType)]
+    # positions carry the column name, so each is a non-empty (truthy) path
+    bad = [
+        f.name
+        for f in stream_df.schema.fields
+        if any(_type_positions(f.dataType, (f.name,)))
+    ]
     if bad:
         raise ValueError(
             f"relationalize_stream: column(s) {bad} carry VARIANT data; "
@@ -191,11 +167,11 @@ class JsonStreamDemux:
     reference's single-pass semantics made micro-batch:
 
     - each batch runs the dynamic relationalize (plan-from-data) with
-      ``convert=False`` and APPENDS every derived table's rows as
-      JSONL under ``{base_path}/{table}`` — untyped, so batches that
-      resolve a conflicted key differently (scalar vs list vs object
-      rows) append to the SAME files without schema conflict, exactly
-      like the reference's append-to-one-output
+      ``convert=False`` and lands every derived table's rows as JSONL
+      under ``{base_path}/{table}/batch={batch_id}`` — untyped, so
+      batches that resolve a conflicted key differently (scalar vs
+      list vs object rows) add to the SAME table without schema
+      conflict, like the reference's append-to-one-output
       (reference relationalize.py:57-80);
     - a running per-table ``Schema`` accumulates across batches via
       the same merge algebra the reference applies across rows
@@ -205,32 +181,28 @@ class JsonStreamDemux:
       typed view is consistent no matter how branches were spread
       over batches.
 
-    Delivery: with ``exactly_once=False`` (flat layout) appends are
-    at-least-once (foreachBatch appends replay on retry, like any
-    non-transactional append sink) — recover exactly-once at read
-    time via ``finalize(dedup_replays=True)``. With
-    ``exactly_once=True`` each batch lands its rows under
-    ``{table}/batch={batch_id}`` with per-directory OVERWRITE: a
-    replayed batch replaces its own previous (possibly partial)
-    output, so the layout is exactly-once by construction — no
-    finalize-side dedup shuffle, and safe even under uuid rid_mode
+    Delivery is exactly-once by construction: each batch directory is
+    written with OVERWRITE, so a replayed batch (foreachBatch retries
+    it after a crash) replaces its own previous, possibly partial,
+    output — no read-side dedup, and safe even under uuid rid_mode
     where replayed lines are not byte-identical. The ``_quarantine``
-    lane is at-least-once in BOTH modes (malformed lines append raw);
+    lane is at-least-once (malformed lines append raw);
     ``read_quarantine`` dedups byte-identical replays on read-back.
 
     The running merged schemas are DURABLE, not driver-only: after
     each batch the merged schema is written to
     ``{base_path}/{table}/_schema.json`` (underscore-prefixed, so data
-    readers ignore it) BEFORE that batch's rows append — the on-disk
+    readers ignore it) BEFORE that batch's rows land — the on-disk
     schema is always a superset of the on-disk rows, so a crash
     between the two writes only leaves schema columns the replayed
-    batch will re-append. A fresh demux instance (checkpoint restart)
+    batch will re-land. A fresh demux instance (checkpoint restart)
     recovers every table's schema from these files on first use;
-    ``finalize`` refuses loudly if ``base_path`` holds a table
-    directory with no recoverable schema (e.g. written by something
-    other than this demux), or a ``__rows__`` tree left by the removed
-    one-write-per-batch layout, rather than emit a silently narrowed
-    view.
+    ``finalize`` refuses loudly if ``base_path`` holds rows this
+    layout cannot vouch for — a table directory with no recoverable
+    schema (e.g. written by something other than this demux), rows
+    outside ``batch=<n>/`` or a ``__rows__`` tree (both left by
+    removed layouts) — rather than emit a silently narrowed or
+    duplicated view.
 
     Scale shape: per batch this is the batch pipeline (variant casts
     and projections after two analysis actions over the persisted
@@ -256,19 +228,6 @@ class JsonStreamDemux:
     name: str
     key_cols: list[str] | None = None
     quarantine: bool = False
-    #: default True on measurement (BASELINE.md r8): per-batch
-    #: overwrite is no slower to write, needs no finalize dedup
-    #: shuffle (2.16 vs 5.54 s at 100x), and is the only mode safe
-    #: under uuid rids. exactly_once=False keeps the reference's flat
-    #: append-to-one-output layout (reference relationalize.py:57-80)
-    #: for sinks that must stay byte-compatible with it.
-    #: MIGRATION: when pointing an exactly_once demux at a base_path
-    #: previously written in the FLAT layout, any batch that crashed
-    #: mid-append pre-upgrade left flat copies the replayed batch=N
-    #: directory now duplicates — run the first post-upgrade
-    #: finalize(dedup_replays=True) once (hash rids), or clean the
-    #: flat files, before trusting the no-dedup view.
-    exactly_once: bool = True
     schemas: dict[str, Schema] = field(default_factory=dict)
     #: batch_id -> number of malformed lines quarantined in that batch
     #: (write-time Observation, no second scan; cleared with the
@@ -303,8 +262,10 @@ class JsonStreamDemux:
         """Merge any persisted per-table schemas under base_path into
         the running state (no-op after the first call). Raises for a
         table directory holding rows without a recoverable
-        _schema.json — appended rows with no schema would silently
-        vanish from finalize() — and for a ``__rows__`` tree, whose
+        _schema.json — rows with no schema would silently vanish from
+        finalize() — for rows directly in a table directory, which the
+        removed flat append layout wrote and whose replay copies
+        nothing dedups any more, and for a ``__rows__`` tree, whose
         rows the removed one-write-per-batch layout wrote and finalize
         no longer reads. Other underscore/dot-prefixed directories
         are metadata, not tables (``_quarantine``, checkpoint
@@ -312,11 +273,13 @@ class JsonStreamDemux:
         ``_schema.json.tmp`` stranded by a crash between
         _fs_write_text's delete and rename is adopted (and the swap
         finished); a table dir whose only content is an unparsable
-        tmp — crash mid-FIRST-schema-write, before any row appended —
+        tmp — crash mid-FIRST-schema-write, before any row landed —
         is skipped, the replayed batch rewrites it."""
         if self._recovered:
             return
-        for t in _fs_list_dirs(spark, self.base_path):
+        for t, is_dir in _fs_ls(spark, self.base_path):
+            if not is_dir:
+                continue
             if t == "__rows__":
                 raise RuntimeError(
                     f"JsonStreamDemux: {self.base_path}/__rows__ holds rows "
@@ -325,22 +288,23 @@ class JsonStreamDemux:
                     "out of the typed view. Move them into per-table "
                     "directories or start from a fresh base_path."
                 )
-            if t.startswith(("_", ".")):
+            if _hidden(t):
                 continue
-            spath = f"{self.base_path}/{t}/_schema.json"
+            tdir = f"{self.base_path}/{t}"
+            spath = f"{tdir}/_schema.json"
             content = _fs_read_text(spark, spath)
             if content is not None:
                 schema = self._parse_schema(content, spath)
                 on_disk = content
             else:
                 tmp = _fs_read_text(spark, spath + ".tmp")
-                has_rows = _fs_has_data_files(spark, f"{self.base_path}/{t}")
+                has_rows = _fs_has_data_files(spark, tdir)
                 if tmp is None and not has_rows:
                     continue  # empty shell dir — nothing to recover
                 if tmp is None:
                     raise RuntimeError(
                         f"JsonStreamDemux: table directory "
-                        f"{self.base_path}/{t} has no _schema.json; its rows "
+                        f"{tdir} has no _schema.json; its rows "
                         "cannot be typed consistently. Was it written by "
                         "something other than JsonStreamDemux?"
                     )
@@ -353,6 +317,15 @@ class JsonStreamDemux:
                 # finish the interrupted swap so the dir is clean again
                 _fs_write_text(spark, spath, tmp)
                 on_disk = tmp
+            flat = [n for n, d in _fs_ls(spark, tdir) if not d and not _hidden(n)]
+            if flat:
+                raise RuntimeError(
+                    f"JsonStreamDemux: table directory {tdir} holds rows "
+                    f"outside batch=<n>/ ({flat[0]}) — the removed flat "
+                    "append layout, whose replayed batches left duplicates "
+                    "nothing dedups any more. Move them into batch=<n> "
+                    "directories or start from a fresh base_path."
+                )
             self.schemas[t] = Schema.merge(
                 self.schemas.get(t, Schema()), schema
             )
@@ -438,18 +411,11 @@ class JsonStreamDemux:
                             spark, f"{self.base_path}/{t}/_schema.json", ser
                         )
                         self._written_schemas[t] = ser
-                    if self.exactly_once:
-                        # idempotent landing zone: a replayed batch
-                        # OVERWRITES its own directory instead of
-                        # re-appending — exactly-once by construction,
-                        # no finalize-side dedup shuffle, uuid-rid-safe.
-                        out.tables[t].write.mode("overwrite").json(
-                            f"{self.base_path}/{t}/batch={batch_id}"
-                        )
-                    else:
-                        out.tables[t].write.mode("append").json(
-                            f"{self.base_path}/{t}"
-                        )
+                    # idempotent landing zone: a replayed batch
+                    # OVERWRITES its own directory (exactly-once)
+                    out.tables[t].write.mode("overwrite").json(
+                        f"{self.base_path}/{t}/batch={batch_id}"
+                    )
 
                 # ... the per-table writes are independent (disjoint
                 # directories, shared persisted parse) and
@@ -465,46 +431,22 @@ class JsonStreamDemux:
         """Wire onto a stream; caller picks trigger/checkpoint."""
         return stream_df.writeStream.foreachBatch(self.process_batch)
 
-    def finalize(
-        self, spark: SparkSession, *, dedup_replays: bool = False
-    ) -> dict[str, DataFrame]:
-        """Typed view of everything appended so far: per table, parse
+    def finalize(self, spark: SparkSession) -> dict[str, DataFrame]:
+        """Typed view of everything landed so far: per table, parse
         the JSONL back to one variant column per merged-schema key and
         split choice columns — the reference's convert pass with the
-        cross-batch schema.
-
-        ``dedup_replays=True`` restores exactly-once semantics over
-        the at-least-once appends by dropping byte-identical JSONL
-        lines: a replayed batch re-appends the SAME lines (rows and
-        their hash-mode rids are deterministic functions of the data
-        and key_cols), so line-level dedup removes exactly the replay
-        copies — one dedup-shuffle per table, keyed on a 192-bit
-        line digest (xxhash64 + md5) rather than the full line bytes,
-        so hash/sort comparisons at shuffle time touch 24-byte keys
-        instead of whole documents (collision across BOTH digests is
-        ~2^-96 — negligible against corpus sizes). Leave it off when
-        (a) rid_mode would be uuid (replays then differ per line and
-        dedup on rid columns downstream is needed instead) or (b) the
-        stream legitimately carries full-duplicate rows WITHIN the
-        key columns (those collapse too — the same caveat
-        ``relationalize``'s key_cols default documents for duplicate
-        rows sharing rids, operators/relationalize.py).
-
-        With ``exactly_once=True`` the layout is already replay-proof
-        (per-batch overwrite), so ``dedup_replays`` is unnecessary —
-        it still runs if asked, but the digest shuffle buys nothing."""
+        cross-batch schema."""
         from ..operators.infer import convert_choice_columns
-        from ..sources.jsonl import VNode, _cast_ddl
 
         self._recover(spark)
         tables: dict[str, DataFrame] = {}
         with session_conf(spark, "spark.sql.caseSensitive", "true"):
             for t, schema in self.schemas.items():
                 tdir = f"{self.base_path}/{t}"
-                # flat appends AND exactly_once batch=N subdirs; the
-                # recursive read skips _-prefixed metadata. A dir with
-                # only _schema.json (crash before the first append)
-                # has no rows to read.
+                # every batch=N subdir, read without partition
+                # discovery (no `batch` column); the read skips
+                # _-prefixed metadata. A dir with only _schema.json
+                # (crash before the first landing) has no rows to read.
                 if _fs_has_data_files(spark, tdir):
                     lines = spark.read.option("recursiveFileLookup", "true").text(
                         tdir
@@ -512,20 +454,11 @@ class JsonStreamDemux:
                 else:
                     lines = spark.createDataFrame([], "value string")
                 lines = lines.where(F.length(F.trim("value")) > 0)
-                if dedup_replays:
-                    lines = _dedup_lines(lines)
-                vdf = lines.select(F.parse_json("value").alias("v"))
-                node = VNode(
-                    kind="object",
-                    fields={
-                        c: VNode(kind="leaf", leaf_type="VARIANT")
-                        for c in schema.columns
-                    },
-                )
-                flat = vdf.select(
-                    F.try_variant_get(F.col("v"), "$", _cast_ddl(node)).alias(
-                        "__r__"
-                    )
+                ddl = ", ".join(f"{_q(c)}: variant" for c in schema.columns)
+                flat = lines.select(
+                    F.try_variant_get(
+                        F.parse_json("value"), "$", f"struct<{ddl}>"
+                    ).alias("__r__")
                 ).select("__r__.*")
                 tables[t] = convert_choice_columns(flat, schema.columns)
         return tables
@@ -535,11 +468,13 @@ class JsonStreamDemux:
     ) -> DataFrame:
         """The quarantined raw lines as a one-column (``value``)
         DataFrame. Delivery into ``_quarantine`` is AT-LEAST-ONCE
-        (the append in process_batch replays on retry exactly like the
-        table appends), so the default dedups byte-identical lines on
-        read-back — the same digest-keyed dedup finalize applies to
-        table rows. Pass ``dedup_replays=False`` to audit raw delivery
-        (e.g. to count replay amplification)."""
+        (the append in process_batch replays on retry), so the default
+        drops byte-identical lines on read-back, keyed on a 192-bit
+        digest pair (xxhash64 + md5): shuffle comparisons touch 24-byte
+        keys instead of whole documents, and collision across BOTH
+        digests is ~2^-96 — negligible against corpus sizes. Pass
+        ``dedup_replays=False`` to audit raw delivery (e.g. to count
+        replay amplification)."""
         qpath = f"{self.base_path}/_quarantine"
         fs, p = _fs_for(spark, qpath)
         if not fs.exists(p):
@@ -549,7 +484,12 @@ class JsonStreamDemux:
             return spark.createDataFrame([], "value string")
         q = spark.read.option("recursiveFileLookup", "true").text(qpath)
         if dedup_replays:
-            q = _dedup_lines(q)
+            q = (
+                q.withColumn("__d1__", F.xxhash64("value"))
+                .withColumn("__d2__", F.md5("value"))
+                .dropDuplicates(["__d1__", "__d2__"])
+                .drop("__d1__", "__d2__")
+            )
         return q
 
 

@@ -195,6 +195,29 @@ def test_flatten_collision_last_write_wins(spark):
     assert rows(out["root"]) == [{"a_b": 1}]
 
 
+def test_generated_link_columns_win_over_user_fields(spark):
+    """A list-element struct carrying user fields ``_rid_``/``_index_``
+    would flatten onto exactly the generated ``xs__rid_``/
+    ``xs__index_``. The reference writes its injected keys INTO the
+    element dict (reference relationalize.py:82-93), so the generated
+    values win and the user fields are gone."""
+    df = spark.createDataFrame(
+        [(1, [(7, "user", 99), (8, "user", 98)])],
+        "id long, xs array<struct<v: long, _rid_: string, _index_: long>>",
+    )
+    out = relationalize(df, "root", key_cols=["id"])
+    assert set(out) == {"root", "root_xs"}
+    [parent] = rows(out["root"])
+    rid = parent["xs"]
+    assert RID_RE.match(rid)
+    assert out["root_xs"].columns == ["xs_v", "xs__rid_", "xs__index_"]
+    children = sorted(rows(out["root_xs"]), key=lambda r: r["xs__index_"])
+    assert children == [
+        {"xs_v": 7, "xs__rid_": rid, "xs__index_": 0},
+        {"xs_v": 8, "xs__rid_": rid, "xs__index_": 1},
+    ]
+
+
 def test_uuid_mode(spark):
     df = df_from_json(spark, [{"id": "a", "xs": [1, 2]}])
     out = relationalize(df, "root", rid_mode="uuid")

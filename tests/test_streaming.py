@@ -338,43 +338,6 @@ def test_json_stream_demux_refuses_uncovered_table_dir(spark, tmp_path):
         demux.finalize(spark)
 
 
-def test_json_stream_demux_dedup_replays(spark, tmp_path):
-    """At-least-once replay recovery: the same batch appended twice
-    (once by a restarted instance — the worst case: replay after a
-    crash that lost driver state) must collapse back to single
-    delivery under finalize(dedup_replays=True), because hash-mode
-    rids and rows are deterministic, so replayed JSONL lines are
-    byte-identical."""
-    from relationalize_spark.streaming.relationalize_stream import JsonStreamDemux
-
-    base = str(tmp_path / "out")
-    batch = spark.createDataFrame(
-        [('{"k": 1, "xs": [7, 8]}',), ('{"k": 2, "xs": [9]}',)], "value string"
-    )
-    # flat layout on purpose: this test attests the at-least-once
-    # append lane + finalize-side dedup (exactly_once=True has no
-    # replay duplicates to dedup by construction)
-    d1 = JsonStreamDemux(base, "root", key_cols=["k"], exactly_once=False)
-    d1.process_batch(batch, 0)
-    d2 = JsonStreamDemux(base, "root", key_cols=["k"], exactly_once=False)
-    d2.process_batch(batch, 0)  # replayed batch
-
-    dup = d2.finalize(spark)
-    assert dup["root"].count() == 4  # at-least-once: duplicates visible
-    clean = d2.finalize(spark, dedup_replays=True)
-    root = {r["k"]: r.asDict() for r in clean["root"].collect()}
-    assert len(root) == 2 and clean["root"].count() == 2
-    kids = sorted(
-        (r.asDict() for r in clean["root_xs"].collect()),
-        key=lambda r: (r["xs__rid_"], r["xs__index_"]),
-    )
-    assert len(kids) == 3
-    rid1, rid2 = root[1]["xs"], root[2]["xs"]
-    assert {c["xs__rid_"] for c in kids} == {rid1, rid2}
-    assert [c["xs__val_"] for c in kids if c["xs__rid_"] == rid1] == [7, 8]
-    assert [c["xs__val_"] for c in kids if c["xs__rid_"] == rid2] == [9]
-
-
 def test_json_stream_demux_schema_only_dir(spark, tmp_path):
     """Crash-window edge of the schema-first write ordering: a table
     directory holding _schema.json but no data yet (crash between the
@@ -388,11 +351,10 @@ def test_json_stream_demux_schema_only_dir(spark, tmp_path):
     base = str(tmp_path / "out")
     _fs_write_text(spark, f"{base}/root/_schema.json", '{"k": "int"}')
     demux = JsonStreamDemux(base, "root")
-    for kw in ({}, {"dedup_replays": True}):
-        tables = demux.finalize(spark, **kw)
-        assert set(tables) == {"root"}
-        assert tables["root"].count() == 0
-        assert tables["root"].columns == ["k"]
+    tables = demux.finalize(spark)
+    assert set(tables) == {"root"}
+    assert tables["root"].count() == 0
+    assert tables["root"].columns == ["k"]
 
 
 def test_json_stream_demux_quarantine(spark, tmp_path):
@@ -493,7 +455,7 @@ def test_json_stream_demux_quarantine_metrics_and_replay(spark, tmp_path):
 
 
 def test_json_stream_demux_exactly_once_layout(spark, tmp_path):
-    """VERDICT r7 item 5: exactly_once=True lands each batch under
+    """VERDICT r7 item 5: the demux lands each batch under
     {table}/batch={id} with per-directory overwrite, so a replayed
     batch REPLACES its previous output instead of re-appending —
     single delivery with NO finalize-side dedup shuffle, and restart
@@ -505,13 +467,13 @@ def test_json_stream_demux_exactly_once_layout(spark, tmp_path):
         [('{"k": 1, "xs": [7, 8]}',), ('{"k": 2, "xs": [9]}',)], "value string"
     )
     b1 = spark.createDataFrame([('{"k": 3, "b": 5}',)], "value string")
-    d1 = JsonStreamDemux(base, "root", key_cols=["k"], exactly_once=True)
+    d1 = JsonStreamDemux(base, "root", key_cols=["k"])
     d1.process_batch(b0, 0)
-    d2 = JsonStreamDemux(base, "root", key_cols=["k"], exactly_once=True)
+    d2 = JsonStreamDemux(base, "root", key_cols=["k"])
     d2.process_batch(b0, 0)  # replay of batch 0 after restart
     d2.process_batch(b1, 1)
 
-    tables = d2.finalize(spark)  # no dedup_replays needed
+    tables = d2.finalize(spark)  # no read-side dedup
     root = {r["k"]: r.asDict() for r in tables["root"].collect()}
     assert len(root) == 3 and tables["root"].count() == 3
     assert root[3]["b"] == 5
@@ -633,6 +595,26 @@ def test_json_stream_demux_refuses_leftover_rows_tree(spark, tmp_path):
     (rows / "part-0.txt").write_text('{"k": 1}\n')
     with pytest.raises(RuntimeError, match=r"/__rows__ holds rows of the removed"):
         JsonStreamDemux(str(base), "root").finalize(spark)
+
+
+def test_json_stream_demux_refuses_flat_layout_rows(spark, tmp_path):
+    """Rows directly in a table directory, outside batch=<n>/, are what
+    the removed flat append layout wrote; its replayed batches left
+    duplicates that finalize() no longer dedups. A base_path holding
+    them must fail loudly, naming the directory, instead of emitting
+    a view that may count rows twice."""
+    from relationalize_spark.streaming.relationalize_stream import (
+        JsonStreamDemux,
+        _fs_write_text,
+    )
+
+    base = tmp_path / "out"
+    _fs_write_text(spark, f"{base}/events/_schema.json", '{"k": "int"}')
+    (base / "events" / "part-00000.json").write_text('{"k": 1}\n{"k": 1}\n')
+    with pytest.raises(
+        RuntimeError, match=r"/events holds rows outside batch=<n>/.*fresh base_path"
+    ):
+        JsonStreamDemux(str(base), "events").finalize(spark)
 
 
 def test_read_quarantine_missing_dir_is_empty(spark, tmp_path):
