@@ -22,9 +22,6 @@ class SQLDialect:
 
     name: str
     type_map: dict[str, str]
-    create_template: str = (
-        'CREATE TABLE IF NOT EXISTS "{schema}"."{table}" (\n    {columns}\n);'
-    )
     quote: str = '"'
     #: Overrides for ``createTableColumnTypes`` (sinks/jdbc.py): that
     #: option is parsed by SPARK's SQL parser, so entries must be
@@ -33,22 +30,21 @@ class SQLDialect:
     #: where ``type_map`` uses an engine-only name like CLOB/BLOB.
     jdbc_overrides: dict[str, str] = field(default_factory=dict)
 
-    def column_def(self, column: str, tag: str) -> str:
-        sql_type = self.type_map[tag]
+    def ident(self, name: str) -> str:
+        """Quote an identifier. A relationalized table or column name
+        can contain any character the source JSON keys had, so an
+        embedded quote char is doubled and cannot break out of (or
+        inject into) the statement."""
         q = self.quote
-        escaped = column.replace(q, q * 2)
-        return f"{q}{escaped}{q} {sql_type}"
+        return q + name.replace(q, q * 2) + q
+
+    def column_def(self, column: str, tag: str) -> str:
+        return f"{self.ident(column)} {self.type_map[tag]}"
 
     def create_table(self, schema: str, table: str, column_defs: list[str]) -> str:
-        # A relationalized table name can contain any character the
-        # source JSON keys had — escape embedded quote chars the same
-        # way column_def does, so the name cannot break out of (or
-        # inject into) the statement.
-        q = self.quote
-        return self.create_template.format(
-            schema=schema.replace(q, q * 2),
-            table=table.replace(q, q * 2),
-            columns=_COLUMN_JOINER.join(column_defs),
+        return (
+            f"CREATE TABLE IF NOT EXISTS {self.ident(schema)}.{self.ident(table)} "
+            f"(\n    {_COLUMN_JOINER.join(column_defs)}\n);"
         )
 
 
@@ -125,9 +121,6 @@ MYSQL = SQLDialect(
         T.BINARY: "LONGBLOB",
         T.NONE: "TINYINT(1)",
     },
-    create_template=(
-        "CREATE TABLE IF NOT EXISTS `{schema}`.`{table}` (\n    {columns}\n);"
-    ),
     quote="`",
 )
 
@@ -147,9 +140,6 @@ BIGQUERY = SQLDialect(
         T.BINARY: "BYTES",
         T.NONE: "BOOL",
     },
-    create_template=(
-        "CREATE TABLE IF NOT EXISTS `{schema}`.`{table}` (\n    {columns}\n);"
-    ),
     quote="`",
 )
 

@@ -1,3 +1,3 @@
-from .vectors import as_double, cosine, dot, l2_distance, norm
+from .vectors import as_double, cosine, dot, norm
 
-__all__ = ["as_double", "cosine", "dot", "l2_distance", "norm"]
+__all__ = ["as_double", "cosine", "dot", "norm"]

@@ -34,11 +34,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    diff = F.zip_with(a, b, lambda x, y: x - y)
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
 def int8_scale(v: Column) -> Column:
     """Per-vector symmetric quantization scale: max|x| / 127."""
     return F.array_max(F.transform(v, lambda x: F.abs(x))) / F.lit(127.0)

@@ -55,19 +55,6 @@ def exact_dedup(
     )
 
 
-def duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Group documents by content hash: (fingerprint, survivor id, size)."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("fp"))
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).alias("n_dups"),
-        )
-    )
-
-
 # -- shingles / Jaccard -----------------------------------------------------
 
 def shingles(text: Column | str, n: int = 3) -> Column:

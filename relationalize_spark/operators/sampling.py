@@ -185,19 +185,6 @@ def weighted_quota_sample(
     )
 
 
-def deterministic_sample_topk(
-    df: DataFrame, k: int, id_col: str = "doc_id", seed: int = 0
-) -> DataFrame:
-    """Exactly-k uniform-ish sample: order by the id hash, take k.
-    TakeOrderedAndProject keeps only k rows per partition in flight
-    (no global sort materialization), so this is the scalable way to
-    get a fixed-size deterministic sample of a huge table.
-    """
-    c = F.col(id_col)
-    h = F.pmod((c + F.lit(seed)) * F.lit(_KNUTH), F.lit(_M32))
-    return df.orderBy(h.asc(), c.asc()).limit(k)
-
-
 def mix_sources(
     df: DataFrame,
     weights: dict[str, float],

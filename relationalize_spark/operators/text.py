@@ -92,13 +92,6 @@ def digit_ratio(text: Column | str) -> Column:
     return digits.cast("double") / char_count(text)
 
 
-def punctuation_ratio(text: Column | str) -> Column:
-    puncts = F.size(
-        F.regexp_extract_all(_c(text), F.lit(f"[^\\w{WS_CHARS}]"), 0)
-    )
-    return puncts.cast("double") / char_count(text)
-
-
 def stopword_ratio(
     text: Column | str, stopwords: tuple[str, ...] = LANG_PROFILES[0][1]
 ) -> Column:

@@ -35,7 +35,7 @@ Known deviations from the reference (documented, intentional):
 from __future__ import annotations
 
 import json
-from collections.abc import Iterable
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 from . import types as T
@@ -105,19 +105,21 @@ class Schema:
             out[f"{key}_{value_tag}"] = value
         return out
 
-    def output_columns(self) -> list[str]:
-        """Sorted final column list; choice columns split per member tag
-        (``none`` members excluded) — reference schema.py:98-114."""
-        cols: list[str] = []
+    def _split_columns(self) -> Iterator[tuple[str, str]]:
+        """``(column, tag)`` per converted column: choice columns split
+        per member tag, ``none`` members excluded (reference
+        schema.py:98-142)."""
         for key, tag in self.columns.items():
             if not T.is_choice(tag):
-                cols.append(key)
+                yield key, tag
                 continue
             for member in T.choice_members(tag):
                 if member != T.NONE:
-                    cols.append(f"{key}_{member}")
-        cols.sort()
-        return cols
+                    yield f"{key}_{member}", member
+
+    def output_columns(self) -> list[str]:
+        """Sorted final column list — reference schema.py:98-114."""
+        return sorted(col for col, _ in self._split_columns())
 
     # -- column hygiene ----------------------------------------------------
 
@@ -175,15 +177,7 @@ class Schema:
     def generate_ddl(self, table: str, schema: str = "public") -> str:
         """CREATE TABLE for the converted (choice-split) layout, with
         column definitions sorted (reference schema.py:116-142)."""
-        defs: list[str] = []
-        for key, tag in self.columns.items():
-            if not T.is_choice(tag):
-                defs.append(self.dialect.column_def(key, tag))
-                continue
-            for member in T.choice_members(tag):
-                if member != T.NONE:
-                    defs.append(self.dialect.column_def(f"{key}_{member}", member))
-        defs.sort()
+        defs = sorted(self.dialect.column_def(c, t) for c, t in self._split_columns())
         return self.dialect.create_table(schema, table, defs)
 
     def serialize(self) -> str:

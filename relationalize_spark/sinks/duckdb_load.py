@@ -51,10 +51,7 @@ def load_tables_to_duckdb(
     counts: dict[str, int] = {}
     base = tmp_dir or tempfile.mkdtemp(prefix="rs_duck_load_")
 
-    def q(ident: str) -> str:
-        # Double-quote identifier escaping: a relationalized table name
-        # can contain any character the source JSON had, including '"'.
-        return '"' + ident.replace('"', '""') + '"'
+    q = dialect.ident
 
     for name, df in tables.items():
         s = schema_of_dataframe(df)

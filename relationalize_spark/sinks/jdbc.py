@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from .. import types as T
+from ..operators.relationalize import _q
 from ..schema import Schema
 
 
@@ -26,22 +27,10 @@ def jdbc_column_types(schema: Schema) -> str:
     the lane against embedded Derby), so double-quoted identifiers
     are a parse error here even though the emitted CREATE uses the
     target dialect's quoting."""
-    defs: list[str] = []
-
-    def q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
     def typ(tag: str) -> str:
         return schema.dialect.jdbc_overrides.get(tag) or schema.dialect.type_map[tag]
 
-    for key, tag in schema.columns.items():
-        if not T.is_choice(tag):
-            defs.append(f"{q(key)} {typ(tag)}")
-            continue
-        for member in T.choice_members(tag):
-            if member != T.NONE:
-                defs.append(f"{q(key + '_' + member)} {typ(member)}")
-    return ", ".join(sorted(defs))
+    return ", ".join(sorted(f"{_q(c)} {typ(t)}" for c, t in schema._split_columns()))
 
 
 def write_jdbc(
@@ -150,8 +139,10 @@ def redshift_copy_sql(
 def postgres_load_plan(schema: Schema, table: str, db_schema: str = "public") -> list[str]:
     """The reference's DROP -> CREATE -> (COPY) -> ANALYZE sequence as
     statements; COPY itself streams client-side via the driver."""
+    d = schema.dialect
+    name = f"{d.ident(db_schema)}.{d.ident(table)}"
     return [
-        f'DROP TABLE IF EXISTS "{db_schema}"."{table}";',
+        f"DROP TABLE IF EXISTS {name};",
         schema.generate_ddl(table, db_schema),
-        f'ANALYZE "{db_schema}"."{table}";',
+        f"ANALYZE {name};",
     ]

@@ -8,7 +8,6 @@ from .jsonl import read_jsonl_variant, relationalize_json
 from .readers import (
     read_binary_files,
     read_csv,
-    read_jsonl,
     read_orc,
     read_parquet,
 )
@@ -23,7 +22,6 @@ __all__ = [
     "relationalize_json",
     "read_binary_files",
     "read_csv",
-    "read_jsonl",
     "read_orc",
     "read_parquet",
     "load_table",

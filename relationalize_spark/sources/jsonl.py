@@ -215,7 +215,24 @@ def relationalize_json(
     else:
         vdf = source
     vdf = vdf.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        tables, schemas = _plan_tables(vdf, name, key_cols, convert, rid_mode)
+    except BaseException:
+        # no RelationalizedJson reaches the caller to release the parse
+        vdf.unpersist()
+        raise
+    return RelationalizedJson(tables, schemas, _cached_input=vdf)
 
+
+def _plan_tables(
+    vdf: DataFrame,
+    name: str,
+    key_cols: list[str] | None,
+    convert: bool,
+    rid_mode: str,
+) -> tuple[dict[str, DataFrame], dict[str, Schema]]:
+    """``relationalize_json``'s analysis and planning over its persisted
+    one-column variant parse ``vdf``."""
     [vcol] = vdf.columns
     tree = merged_variant_schema(vdf, vcol)
     if tree.kind != "object":
@@ -258,4 +275,4 @@ def relationalize_json(
                 tables[tname], schemas[tname] = tdf, infer_schema(
                     tdf, tag_hints=hints.get(tname)
                 )
-    return RelationalizedJson(tables, schemas, _cached_input=vdf)
+    return tables, schemas

@@ -35,18 +35,6 @@ def read_csv(
     return reader.csv(path)
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """Schema-typed JSONL (Spark's native reader: unifies mixed types).
-    For reference-exact per-row type fidelity / choice inference use
-    sources.jsonl.read_jsonl_variant instead."""
-    reader = spark.read
-    if schema:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_jsonl_quarantine(
     spark: SparkSession, path: str, schema: str
 ) -> tuple[DataFrame, DataFrame]:

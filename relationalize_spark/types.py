@@ -41,10 +41,6 @@ def is_choice(tag: str) -> bool:
     return tag.startswith(CHOICE_PREFIX)
 
 
-def is_unsupported(tag: str) -> bool:
-    return tag.startswith(UNSUPPORTED_PREFIX)
-
-
 def choice_members(tag: str) -> list[str]:
     """Member base tags of a choice tag (``c-int-str`` -> [int, str])."""
     if not is_choice(tag):

@@ -28,10 +28,13 @@ def _write(tmp_path, lines):
     ids=["top_level_array", "top_level_scalar", "objects_and_scalar", "empty_file", "all_null"],
 )
 def test_degenerate_corpus_raises(spark, tmp_path, lines, message):
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(ValueError) as exc:
         relationalize_json(_write(tmp_path, lines), "root", spark=spark)
     assert type(exc.value) is ValueError
     assert str(exc.value) == f"top-level JSON must be objects, {message}"
+    # the raise releases the persisted parse
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
 
 
 def test_all_empty_objects_give_columnless_root(spark, tmp_path):

@@ -223,6 +223,17 @@ def test_golden_ddl_new_dialects():
     )
 
 
+def test_spark_dialect_ddl_quotes_table_with_backticks():
+    """The Spark dialect quotes the table name with the same rule as its
+    columns: Spark's parser rejects a double-quoted table identifier."""
+    from relationalize_spark.dialects import DIALECTS
+
+    s = Schema({"a": "int"}, dialect=DIALECTS["spark"])
+    assert s.generate_ddl("x`y", schema="p") == (
+        "CREATE TABLE IF NOT EXISTS `p`.`x``y` (\n    `a` BIGINT\n);"
+    )
+
+
 def test_sqlite_ddl_is_valid():
     """SQLite ships with Python - execute the generated DDL for real
     (the only dialect whose engine exists in this container besides

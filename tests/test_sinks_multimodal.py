@@ -77,6 +77,11 @@ def test_jdbc_plan(small):
     plan = postgres_load_plan(s, "users")
     assert plan[0] == 'DROP TABLE IF EXISTS "public"."users";'
     assert "CREATE TABLE IF NOT EXISTS" in plan[1]
+    # names carrying '"' are escaped in DROP/ANALYZE exactly as in CREATE
+    plan = postgres_load_plan(Schema({"a": "int"}), 'x"y', 'p"q')
+    assert plan[0] == 'DROP TABLE IF EXISTS "p""q"."x""y";'
+    assert plan[1].startswith('CREATE TABLE IF NOT EXISTS "p""q"."x""y" (')
+    assert plan[2] == 'ANALYZE "p""q"."x""y";'
     sql = redshift_copy_sql("t", "s3://b/k", "arn:aws:iam::1:role/r")
     assert sql.startswith("COPY t FROM 's3://b/k'") and "GZIP" in sql
 
