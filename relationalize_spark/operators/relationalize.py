@@ -367,8 +367,12 @@ def _expand_variants(
             tag_sets[c] = scalars
             analyzed.add(c)
             if "arr" in observed or scalars:
-                # strip the object branch; arrays/scalars stay put
-                keep[c], keep_paths[c] = F.when(~_is_obj(c), F.col(_q(c))), paths[c]
+                # arrays/scalars stay put; strip the object branch only
+                # where one was observed (the strip is a per-row
+                # schema_of_variant)
+                keep[c], keep_paths[c] = F.col(_q(c)), paths[c]
+                if "obj" in observed:
+                    keep[c] = F.when(~_is_obj(c), keep[c])
                 arr_flags[c] = "arr" in observed
             if "obj" in observed and obj.kind == "object" and obj.fields:
                 tmp = f"__vobj{DELIM}{idx[c]}__"

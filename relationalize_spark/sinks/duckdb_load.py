@@ -54,6 +54,10 @@ def load_tables_to_duckdb(
     q = dialect.ident
 
     for name, df in tables.items():
+        if not df.columns:
+            # DuckDB's own refusal ("Table must have at least one
+            # column!") names no table
+            raise ValueError(f"table {name!r} has no columns; drop it before loading")
         s = schema_of_dataframe(df)
         bad = {c: t for c, t in s.columns.items() if t.startswith(T.UNSUPPORTED_PREFIX)}
         if bad:

@@ -162,7 +162,7 @@ class RelationalizedJson:
 
     tables: dict[str, DataFrame]
     schemas: dict[str, Schema]
-    _cached_input: DataFrame | None = None
+    _typed: DataFrame | None = None
 
     def __getitem__(self, name: str) -> DataFrame:
         return self.tables[name]
@@ -171,11 +171,11 @@ class RelationalizedJson:
         return iter(self.tables)
 
     def unpersist(self) -> None:
-        """Release the cached parsed-variant input (call after the
-        output tables have been written; further reads of them would
-        re-parse the JSON)."""
-        if self._cached_input is not None:
-            self._cached_input.unpersist()
+        """Release the cached typed frame the tables read (call after
+        they have been written; further reads of them would re-parse
+        and re-cast the JSON). A caller-supplied source is untouched."""
+        if self._typed is not None:
+            self._typed.unpersist()
 
 
 def relationalize_json(
@@ -202,11 +202,13 @@ def relationalize_json(
 
     The pipeline is inherently multi-pass (schema union needs every
     row before the typed cast exists — same reason the reference
-    iterates the file twice, ref README.md:60-77), so the
-    parsed-variant input is persisted MEMORY_AND_DISK for the
-    analysis passes and left cached for the caller's materialization:
-    the JSON parse is paid once, not once per pass. Call
-    ``.unpersist()`` on the result after writing the tables.
+    iterates the file twice, ref README.md:60-77). The merge reads the
+    source; the typed frame — each object cast once to the merged
+    struct — is persisted MEMORY_AND_DISK, filled by the stats round
+    and left cached for the caller's materialization, so every table
+    reads struct columns instead of re-running the whole-object cast.
+    Call ``.unpersist()`` on the result after writing the tables. A
+    caller-supplied ``source`` is never persisted or released here.
     """
     if isinstance(source, str):
         if spark is None:
@@ -214,25 +216,6 @@ def relationalize_json(
         vdf = read_jsonl_variant(spark, source)
     else:
         vdf = source
-    vdf = vdf.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        tables, schemas = _plan_tables(vdf, name, key_cols, convert, rid_mode)
-    except BaseException:
-        # no RelationalizedJson reaches the caller to release the parse
-        vdf.unpersist()
-        raise
-    return RelationalizedJson(tables, schemas, _cached_input=vdf)
-
-
-def _plan_tables(
-    vdf: DataFrame,
-    name: str,
-    key_cols: list[str] | None,
-    convert: bool,
-    rid_mode: str,
-) -> tuple[dict[str, DataFrame], dict[str, Schema]]:
-    """``relationalize_json``'s analysis and planning over its persisted
-    one-column variant parse ``vdf``."""
     [vcol] = vdf.columns
     tree = merged_variant_schema(vdf, vcol)
     if tree.kind != "object":
@@ -249,30 +232,47 @@ def _plan_tables(
     with session_conf(vdf.sparkSession, "spark.sql.caseSensitive", "true"):
         typed = vdf.select(
             F.try_variant_get(F.col(vcol), "$", _cast_ddl(tree)).alias("__r__")
-        ).select("__r__.*")
+        ).select("__r__.*").persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            tables, schemas = _plan_tables(typed, name, key_cols, convert, rid_mode)
+        except BaseException:
+            # no RelationalizedJson reaches the caller to release it
+            typed.unpersist()
+            raise
+    return RelationalizedJson(tables, schemas, _typed=typed)
 
-        hints: dict[str, dict[str, str]] = {}
-        raw_tables = relationalize(
-            typed, name, key_cols=key_cols, rid_mode=rid_mode, infer_hints=hints
-        )
-        tables: dict[str, DataFrame] = {}
-        schemas: dict[str, Schema] = {}
-        for tname, tdf in raw_tables.items():
-            if convert:
-                # branch-analysis tag hints make inference scan-free
-                # for single-parent tables (see infer_and_convert)
-                tables[tname], schemas[tname] = infer_and_convert(
-                    tdf, tag_hints=hints.get(tname)
-                )
-            else:
-                # untyped output still needs REAL observed tags (a key
-                # conflicted within this frame must record e.g.
-                # c-int-str, not a raw-variant placeholder) so that
-                # downstream Schema.merge — the streaming demux's
-                # cross-batch accumulation — composes correctly.
-                from ..operators.infer import infer_schema
 
-                tables[tname], schemas[tname] = tdf, infer_schema(
-                    tdf, tag_hints=hints.get(tname)
-                )
+def _plan_tables(
+    typed: DataFrame,
+    name: str,
+    key_cols: list[str] | None,
+    convert: bool,
+    rid_mode: str,
+) -> tuple[dict[str, DataFrame], dict[str, Schema]]:
+    """``relationalize_json``'s stats round and planning over its
+    persisted typed frame; the first action fills the cache."""
+    hints: dict[str, dict[str, str]] = {}
+    raw_tables = relationalize(
+        typed, name, key_cols=key_cols, rid_mode=rid_mode, infer_hints=hints
+    )
+    tables: dict[str, DataFrame] = {}
+    schemas: dict[str, Schema] = {}
+    for tname, tdf in raw_tables.items():
+        if convert:
+            # branch-analysis tag hints make inference scan-free
+            # for single-parent tables (see infer_and_convert)
+            tables[tname], schemas[tname] = infer_and_convert(
+                tdf, tag_hints=hints.get(tname)
+            )
+        else:
+            # untyped output still needs REAL observed tags (a key
+            # conflicted within this frame must record e.g.
+            # c-int-str, not a raw-variant placeholder) so that
+            # downstream Schema.merge — the streaming demux's
+            # cross-batch accumulation — composes correctly.
+            from ..operators.infer import infer_schema
+
+            tables[tname], schemas[tname] = tdf, infer_schema(
+                tdf, tag_hints=hints.get(tname)
+            )
     return tables, schemas

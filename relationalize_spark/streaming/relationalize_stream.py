@@ -204,10 +204,10 @@ class JsonStreamDemux:
     removed layouts) — rather than emit a silently narrowed or
     duplicated view.
 
-    Scale shape: per batch this is the batch pipeline (variant casts
-    and projections after two analysis actions over the persisted
-    batch parse: the whole-object merge and one path-keyed stats
-    round); the running schemas are
+    Scale shape: per batch this is the batch pipeline (projections
+    over the batch's cached typed frame after two analysis actions:
+    the whole-object merge over the parse and one path-keyed stats
+    round, which fills the cache); the running schemas are
     driver-side dicts of column tags — O(columns), not O(rows) — and
     the per-batch persistence is one tiny metadata file per table.
 
@@ -418,7 +418,7 @@ class JsonStreamDemux:
                     )
 
                 # ... the per-table writes are independent (disjoint
-                # directories, shared persisted parse) and
+                # directories, one shared cached typed frame) and
                 # driver-latency bound, so they overlap on a pool.
                 with ThreadPoolExecutor(max_workers=_WRITE_POOL_SIZE) as ex:
                     # list() drains the map so the first failure

@@ -61,3 +61,12 @@ def test_load_real_testdata_table(spark, sf_dir, tmp_path):
     assert con.execute(
         "SELECT count(*) FROM main.customer_dim WHERE c_name IS NULL"
     ).fetchone()[0] == 0
+
+
+def test_load_names_zero_column_table(spark, tmp_path):
+    # hygiene can drop every column of a table (an all-`{}` corpus);
+    # DuckDB's own error would not say which table
+    con = duckdb.connect()
+    with pytest.raises(ValueError, match="table 'root' has no columns"):
+        load_tables_to_duckdb({"root": spark.range(1).select()}, con, tmp_dir=str(tmp_path))
+    assert con.execute("SELECT count(*) FROM duckdb_tables()").fetchone()[0] == 0

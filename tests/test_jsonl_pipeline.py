@@ -145,12 +145,11 @@ def test_inferred_choice_schema_tags(spark):
 
 
 def test_mixed_array_elements_choice_via_fused_analysis(spark):
-    """r12: the fused top-level analysis also carries the ELEMENT
-    class sets of first-level arrays (lvl=1 rows of the one grouped
-    job), so the child table's ``{key}__val_`` branch analysis runs
-    scan-free. Mixed int/str/object elements must still produce the
-    child's choice columns and grandchild table exactly as the
-    per-level aggregate did."""
+    """``v`` is a VARIANT position of the whole-object merge, and the
+    one path-keyed stats round reads its elements (``v[]``) one level
+    ahead, so the child table's ``v__val_`` is planned with no further
+    action. Mixed int/str/object elements must still produce the
+    child's choice columns, and object elements spread into ``v_a``."""
     out = relationalize_json(
         vdf(
             spark,
@@ -223,8 +222,9 @@ def test_analysis_is_merge_plus_one_stats_round(spark, objs, monkeypatch):
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     monkeypatch.setattr(type(df), "collect", counting_collect)
-    relationalize_json(df, "root", convert=False)
+    out = relationalize_json(df, "root", convert=False)
     monkeypatch.undo()
+    out.unpersist()
     after = set(tracker.getJobIdsForGroup(None))
     sites = set()
     for jid in after - before:
