@@ -68,9 +68,7 @@ def main() -> None:
     from relationalize_spark.sinks.duckdb_load import load_tables_to_duckdb
 
     con = duckdb.connect()
-    counts = load_tables_to_duckdb(
-        {"items": items.drop("meta")}, con, tmp_dir=f"{work}/load"
-    )
+    counts = load_tables_to_duckdb({"items": items.drop("meta")}, con)
     print(json.dumps({"landed_rows": n, "loaded": counts}))
     shutil.rmtree(work)
     spark.stop()

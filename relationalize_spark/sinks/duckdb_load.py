@@ -8,28 +8,30 @@ Postgres/Redshift lane ships as tested SQL/plan generation only
 (``sinks/jdbc.py``) — but DuckDB IS here, and it is a real columnar
 warehouse engine. This module runs the reference pipeline's load
 stage for real: per relationalized table, DDL from the engine's tag
-vocabulary, ``CREATE``, bulk load through a parquet hand-off (the
-columnar COPY analog — no row-at-a-time round trips through Python),
-and the post-load validation — row counts like the reference, plus
+vocabulary, ``CREATE``, bulk load through an in-process Arrow hand-off
+(the columnar COPY analog — no row-at-a-time round trips through
+Python, and no files for the same process to read back), and the
+post-load validation — row counts like the reference, plus
 the order-insensitive ``table_checksum`` so the loaded bytes are
 proven value-identical, not merely the same cardinality.
 
-Scale note: the parquet hand-off is the same files a warehouse COPY
-would ingest from object storage; Spark writes them distributed, and
-only the embedded engine's ingest is single-node (as any one COPY
-target is).
+Memory note: each table is collected once as an Arrow table in the
+driver process, where the embedded engine holds its rows anyway. A
+load larger than driver memory should write parquet with
+``writers.write_parquet`` and have the engine ``read_parquet`` it
+directly.
 """
 
 from __future__ import annotations
-
-import os
-import tempfile
 
 from pyspark.sql import DataFrame
 
 from ..dialects import DIALECTS, SQLDialect
 from ..operators.infer import schema_of_dataframe
 from .. import types as T
+
+#: view name each table's Arrow data is registered under for its INSERT
+_ARROW_VIEW = "__rs_load_arrow__"
 
 
 def load_tables_to_duckdb(
@@ -43,14 +45,18 @@ def load_tables_to_duckdb(
     """Create + bulk-load every table into ``con`` (a
     ``duckdb.Connection``); returns loaded row counts per table.
 
+    Each table reaches the engine as one Arrow table registered under
+    a reserved view name; nothing is written to disk, and ``tmp_dir``
+    is accepted but ignored.
+
     Raises ``ValueError`` up front if any column's type has no DDL
     mapping (nested/array columns — relationalize output is flat, so
     hitting this means the input was not relationalized).
     """
+    import pyarrow as pa
+
     dialect = dialect or DIALECTS["duckdb"]
     counts: dict[str, int] = {}
-    base = tmp_dir or tempfile.mkdtemp(prefix="rs_duck_load_")
-
     q = dialect.ident
 
     for name, df in tables.items():
@@ -67,19 +73,21 @@ def load_tables_to_duckdb(
             )
         s.dialect = dialect
         con.execute(s.generate_ddl(name, schema=schema))
-        path = os.path.join(base, name)
-        df.write.mode("overwrite").parquet(path)
-        # BY NAME: the DDL sorts column defs (reference behavior), the
-        # parquet keeps frame order — let the engine align them.
-        glob = path.replace("\\", "/") + "/*.parquet"
-        # The path goes through a prepared-statement parameter, not
-        # string interpolation — a tmp dir containing a quote cannot
-        # break (or inject into) the statement.
-        con.execute(
-            f"INSERT INTO {q(schema)}.{q(name)} BY NAME "
-            "SELECT * FROM read_parquet(?)",
-            [glob],
-        )
+        arrow = df.toArrow()
+        # Spark timestamps arrive tz-aware (UTC), and the engine would
+        # cast them into TIMESTAMP through its TimeZone: drop the zone
+        naive = [f.with_type(pa.timestamp(f.type.unit)) if pa.types.is_timestamp(f.type) else f
+                 for f in arrow.schema]
+        con.register(_ARROW_VIEW, arrow.cast(pa.schema(naive)))
+        try:
+            # BY NAME: the DDL sorts column defs (reference behavior),
+            # the frame keeps its order — let the engine align them.
+            con.execute(
+                f"INSERT INTO {q(schema)}.{q(name)} BY NAME "
+                f"SELECT * FROM {_ARROW_VIEW}"
+            )
+        finally:
+            con.unregister(_ARROW_VIEW)
         counts[name] = con.execute(
             f"SELECT count(*) FROM {q(schema)}.{q(name)}"
         ).fetchone()[0]

@@ -22,7 +22,9 @@ from __future__ import annotations
 import json
 from collections.abc import Callable, Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+
+from .jsonl import RelationalizedJson, read_jsonl_variant, relationalize_json
 
 
 def export_documents_to_jsonl(docs: Iterable[dict], path: str) -> int:
@@ -121,12 +123,13 @@ def rest_export_jsonl(
 
 def jsonl_to_tables(
     spark: SparkSession, path: str, root_name: str
-) -> dict[str, DataFrame]:
+) -> RelationalizedJson:
     """JSONL file -> fully relationalized tables: VARIANT ingest,
     distributed schema inference with choice splitting, nested-array
     split-out with rid linkage. The Spark half of the reference's
-    export->Relationalize->convert pipelines."""
-    from .jsonl import read_jsonl_variant, relationalize_json
+    export->Relationalize->convert pipelines.
 
+    The tables read a cached typed frame; call ``.unpersist()`` on the
+    result after they have been written."""
     vdf = read_jsonl_variant(spark, path)
     return relationalize_json(vdf, root_name)

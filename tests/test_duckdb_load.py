@@ -2,6 +2,9 @@
 validate, against a real embedded engine (the reference's
 full_pokemon_psql_pipeline stage run for real, not plan-only)."""
 
+import datetime
+import math
+
 import duckdb
 import pyspark.sql.functions as F
 import pytest
@@ -70,3 +73,71 @@ def test_load_names_zero_column_table(spark, tmp_path):
     with pytest.raises(ValueError, match="table 'root' has no columns"):
         load_tables_to_duckdb({"root": spark.range(1).select()}, con, tmp_dir=str(tmp_path))
     assert con.execute("SELECT count(*) FROM duckdb_tables()").fetchone()[0] == 0
+
+
+# One row per edge: the extremes, then an all-null row. Spark's session
+# time zone is UTC (plans/session.py), so the TIMESTAMP literals are
+# UTC instants.
+_EDGE_ROWS_SQL = """
+SELECT * FROM VALUES
+ (CAST('-9223372036854775808' AS BIGINT), CAST('NaN' AS DOUBLE), '', true,
+  DATE'0001-01-01', TIMESTAMP'2024-03-10 12:30:05',
+  TIMESTAMP_NTZ'2024-03-10 12:30:05', CAST(12345678.91 AS DECIMAL(10,2)), X''),
+ (CAST('9223372036854775807' AS BIGINT), CAST(-0.5 AS DOUBLE), 'héllo', false,
+  DATE'9999-12-31', TIMESTAMP'1969-12-31 23:59:59.999999',
+  TIMESTAMP_NTZ'1900-01-01 00:00:00', CAST(-0.01 AS DECIMAL(10,2)), X'00FF'),
+ (NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)
+ AS t(i, d, s, b, dt, ts, ntz, dec, bin)
+"""
+
+# What the engine holds after the load, whatever the connection's time
+# zone: a Spark timestamp lands as the naive UTC wall clock.
+_EDGE_ROWS_LOADED = [
+    (-(2**63), "NaN", "", True, datetime.date(1, 1, 1),
+     datetime.datetime(2024, 3, 10, 12, 30, 5),
+     datetime.datetime(2024, 3, 10, 12, 30, 5), 12345678.91, b""),
+    (2**63 - 1, -0.5, "héllo", False, datetime.date(9999, 12, 31),
+     datetime.datetime(1969, 12, 31, 23, 59, 59, 999999),
+     datetime.datetime(1900, 1, 1, 0, 0), -0.01, b"\x00\xff"),
+    (None,) * 9,
+]
+
+_EDGE_DDL_TYPES = {
+    "i": "BIGINT", "d": "DOUBLE", "s": "VARCHAR", "b": "BOOLEAN",
+    "dt": "DATE", "ts": "TIMESTAMP", "ntz": "TIMESTAMP", "dec": "DOUBLE",
+    "bin": "BLOB",
+}
+
+
+@pytest.mark.parametrize("time_zone", ["UTC", "America/New_York"])
+def test_load_keeps_every_ddl_type_under_any_time_zone(spark, tmp_path, time_zone):
+    df = spark.sql(_EDGE_ROWS_SQL)
+    con = duckdb.connect()
+    con.execute(f"SET TimeZone='{time_zone}'")
+    counts = load_tables_to_duckdb(
+        {"edges": df, "edges_empty": df.where("false")}, con, tmp_dir=str(tmp_path)
+    )
+    assert counts == {"edges": 3, "edges_empty": 0}
+    for table in ("edges", "edges_empty"):
+        described = con.execute(f"DESCRIBE main.{table}").fetchall()
+        assert {r[0]: r[1] for r in described} == _EDGE_DDL_TYPES
+    rows = con.execute(
+        "SELECT i, d, s, b, dt, ts, ntz, dec, bin FROM main.edges ORDER BY i NULLS LAST"
+    ).fetchall()
+    # NaN equals nothing, itself included; compare it as a marker
+    rows = [
+        tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r)
+        for r in rows
+    ]
+    assert rows == _EDGE_ROWS_LOADED
+
+
+def test_load_writes_no_file(spark, tmp_path):
+    tables = relationalize(
+        spark.createDataFrame([(1, [10, 20])], "id long, scores array<int>"),
+        "users",
+        key_cols=["id"],
+    )
+    counts = load_tables_to_duckdb(tables, duckdb.connect(), tmp_dir=str(tmp_path))
+    assert counts == {"users": 1, "users_scores": 2}
+    assert list(tmp_path.rglob("*")) == []

@@ -12,6 +12,7 @@ from relationalize_spark.sources.external import (
     mongo_export_jsonl,
     rest_export_jsonl,
 )
+from relationalize_spark.sources.jsonl import RelationalizedJson
 
 
 class _FakeCollection:
@@ -72,6 +73,19 @@ def test_mongo_export_relationalizes_with_choice_and_children(spark, tmp_path):
         root.tags == F.col("tags__rid_"),
     )
     assert joined.count() == 2
+
+
+def test_jsonl_to_tables_releases_its_cache(spark, tmp_path):
+    path = str(tmp_path / "users.jsonl")
+    export_documents_to_jsonl(MONGO_DOCS, path)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    out = jsonl_to_tables(spark, path, "users")
+    assert type(out) is RelationalizedJson
+    assert out["users_tags"].count() == 2
+    assert persisted().size() == before + 1
+    out.unpersist()
+    assert persisted().size() == before
 
 
 POKE_LISTING = {
