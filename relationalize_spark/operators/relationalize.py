@@ -162,20 +162,21 @@ def _cast_positions(node, path: tuple):
         yield path
 
 
-def _missing(path: tuple, stats: dict):
-    """The VARIANT positions at or below ``path`` that planning will
-    look up and ``stats`` does not hold yet: ``path`` itself, the
-    elements of its array branch, and the VARIANT positions of its
-    object branch as cast by its merged object schema."""
+def _lookups(path: tuple, stats: dict):
+    """The VARIANT positions at or below ``path`` that planning looks
+    up: ``path`` itself, the elements of its array branch, and the
+    VARIANT positions of its object branch as cast by its merged
+    object schema — as far as ``stats`` says those branches exist. A
+    position ``stats`` does not hold is yielded, but not walked."""
+    yield path
     if path not in stats:
-        yield path
         return
     observed, obj = stats[path]
     if "arr" in observed:
-        yield from _missing(path + (_EACH,), stats)
+        yield from _lookups(path + (_EACH,), stats)
     if "obj" in observed:
         for p in _cast_positions(obj, path):
-            yield from _missing(p, stats)
+            yield from _lookups(p, stats)
 
 
 def _flat(arrays: Column) -> Column:
@@ -210,6 +211,19 @@ def _values_at(types: dict, path: tuple) -> Column:
     return at(F.col(_q(path[0])), types[path[0]], path[1:])
 
 
+def _value_class(v: Column) -> Column:
+    """A VARIANT value's class: ``arr``, ``obj`` or its scalar
+    reference tag (``none`` for a JSON null, null for SQL NULL)."""
+    from .infer import ref_tag_from_schema_str
+
+    sov = F.schema_of_variant(v)
+    return (
+        F.when(sov.startswith("ARRAY"), F.lit("arr"))
+        .when(sov.startswith("OBJECT"), F.lit("obj"))
+        .otherwise(ref_tag_from_schema_str(sov))
+    )
+
+
 def _stats_round(df: DataFrame, positions: list[tuple]) -> dict[tuple, tuple]:
     """ONE eager action over ``df``: the class set (``arr``/``obj``/
     scalar reference tags) and the merged object-branch schema of
@@ -219,7 +233,6 @@ def _stats_round(df: DataFrame, positions: list[tuple]) -> dict[tuple, tuple]:
     ``(position, child)``, so the aggregate is as wide for a thousand
     positions as for one."""
     from ..sources.jsonl import parse_variant_schema
-    from .infer import ref_tag_from_schema_str
 
     types = {f.name: f.dataType for f in df.schema.fields}
     pv = df.select(
@@ -243,16 +256,10 @@ def _stats_round(df: DataFrame, positions: list[tuple]) -> dict[tuple, tuple]:
         F.transform(elems, lambda e: child(1, nokey, e)),
         F.transform(fields, lambda kv: child(2, kv["key"], kv["value"])),
     ))
-    sov = F.schema_of_variant("v")
-    cls = (
-        F.when(sov.startswith("ARRAY"), F.lit("arr"))
-        .when(sov.startswith("OBJECT"), F.lit("obj"))
-        .otherwise(ref_tag_from_schema_str(sov))
-    )
     is_obj = F.col("cls") == "obj"
     rows = (
         pv.select("p", F.inline(children))
-        .select("p", "kind", "key", "v", cls.alias("cls"))
+        .select("p", "kind", "key", "v", _value_class(v).alias("cls"))
         .groupBy("p", "kind", "key")
         .agg(
             F.collect_set("cls").alias("cset"),
@@ -271,28 +278,28 @@ def _stats_round(df: DataFrame, positions: list[tuple]) -> dict[tuple, tuple]:
     return out
 
 
-def _position_stats(df: DataFrame) -> dict[tuple, tuple]:
-    """Class set and merged object-branch schema of every VARIANT
-    position planning will meet, keyed by JSON path.
+def _position_stats(df: DataFrame, stats: dict[tuple, tuple]) -> None:
+    """Fill ``stats`` with the class set and merged object-branch
+    schema of every VARIANT position planning will meet that it does
+    not hold yet, keyed by JSON path.
 
     A VARIANT position is a path in the JSON tree (struct fields and
     array elements at any depth) whose type is VARIANT: where the
     corpus-wide schema merge conflicted or saw a fractional number
     (sources/jsonl.py:_cast_ddl), and, once their stats are known,
     the positions inside a VARIANT position's array and object
-    branches. One round (``_stats_round``) reads every position off
-    ``df`` itself — never off a per-table lineage, so the plan does
-    not grow with the table count — and looks one level ahead; a
-    further round runs only for positions the lookahead still missed
-    (a conflict inside a conflicted branch). Planning itself then
-    runs no Spark action."""
+    branches. One round (``_stats_round``) reads every missing
+    position off ``df`` itself — never off a per-table lineage, so
+    the plan does not grow with the table count — and looks one level
+    ahead; a further round runs only for positions the lookahead
+    still missed (a conflict inside a conflicted branch). When
+    ``stats`` already covers every position, no round runs. Planning
+    itself then runs no Spark action."""
     roots = [p for f in df.schema.fields for p in _type_positions(f.dataType, (f.name,))]
-    stats: dict[tuple, tuple] = {}
-    todo = roots
-    while todo:
+    while todo := list(dict.fromkeys(
+        p for r in roots for p in _lookups(r, stats) if p not in stats
+    )):
         stats.update(_stats_round(df, todo))
-        todo = list(dict.fromkeys(m for p in roots for m in _missing(p, stats)))
-    return stats
 
 
 def _expand_variants(
@@ -390,6 +397,7 @@ def relationalize(
     key_cols: Sequence[str] | None = None,
     rid_mode: Literal["hash", "uuid"] = "hash",
     infer_hints: dict | None = None,
+    position_stats: dict | None = None,
 ) -> dict[str, DataFrame]:
     """Flatten ``df`` into a dict of flat DataFrames keyed by table name.
 
@@ -409,10 +417,16 @@ def relationalize(
         to ``infer_and_convert(tag_hints=...)`` to skip its per-table
         tag scan (tables assembled by multi-parent union are omitted;
         they fall back to the scan).
+    position_stats: optional caller-provided dict of VARIANT-position
+        stats keyed by JSON path (``_position_stats``). Positions it
+        holds are planned from it, not re-read; the stats round adds
+        the ones it lacks, so after the call it holds every position
+        planning read.
 
     A frame with VARIANT columns costs one eager stats action over
     ``df`` before planning (``_position_stats``; a second only for a
-    conflict inside a conflicted branch); a typed frame costs none.
+    conflict inside a conflicted branch; none when ``position_stats``
+    covers every position); a typed frame costs none.
     A chain of child tables deeper than ``_MAX_DEPTH`` (24) raises
     ``ValueError``.
     """
@@ -421,7 +435,8 @@ def relationalize(
     else:
         row_key = F.to_json(F.struct(*[F.col(_q(c)) for c in df.columns]))
 
-    stats = _position_stats(df)
+    stats = {} if position_stats is None else position_stats
+    _position_stats(df, stats)
     out: dict[str, DataFrame] = {}
     hint_sets: dict[str, dict[str, set] | None] = {}
     _process(

@@ -22,6 +22,20 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """A local or cluster session with the settings below; ``extra_conf``
+    entries are applied last, so they override any of them.
+
+    PySpark's DataFrame call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled``) is off: with it on,
+    every Column function walks the Python stack, tries to import
+    IPython and makes about five extra py4j calls, which more than
+    doubles the driver round trips of a dynamic-JSON micro-batch. Pass
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+    to get call sites back in error messages. PySpark reads the flag
+    once per process, from the session active when the first Column is
+    built, so a session built some other way must set it before that
+    happens for the setting to take effect.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle = str(shuffle_partitions or os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
@@ -67,6 +81,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "128m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
+        # No per-Column call-site capture (see the docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

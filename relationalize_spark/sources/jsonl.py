@@ -17,14 +17,25 @@ Python.
 
 from __future__ import annotations
 
+import functools
+import threading
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.infer import infer_and_convert
-from ..operators.relationalize import _q, relationalize
+from ..operators.relationalize import (
+    VariantType,
+    _cast_positions,
+    _flat,
+    _lookups,
+    _q,
+    _value_class,
+    _values_at,
+    relationalize,
+)
 from ..plans.session import session_conf
 from ..schema import Schema
 
@@ -155,13 +166,180 @@ def merged_variant_schema(df: DataFrame, column: str = "v") -> VNode:
     return parse_variant_schema(merged)
 
 
+# -- running analysis state -------------------------------------------------
+# A stream of batches keeps the merged schema tree and the position stats
+# of the batches it has planned. A batch whose own merge and stats fit
+# inside them is planned from them, with no stats round.
+
+
+def _void(node: VNode) -> bool:
+    return node.kind == "leaf" and node.leaf_type.upper() == "VOID"
+
+
+def _join(a: VNode, b: VNode) -> VNode:
+    """Merged schema of two corpora: object keys unite (in the sorted
+    order ``schema_of_variant_agg`` emits), an all-null side takes the
+    other, and any other disagreement is a VARIANT leaf."""
+    if _void(a):
+        return b
+    if _void(b):
+        return a
+    if a.kind == b.kind == "object":
+        return VNode("object", fields={
+            k: _join(a.fields[k], b.fields[k])
+            if k in a.fields and k in b.fields
+            else a.fields.get(k, b.fields.get(k))
+            for k in sorted(a.fields.keys() | b.fields.keys())
+        })
+    if a.kind == b.kind == "array":
+        return VNode("array", element=_join(a.element, b.element))
+    if a.kind == b.kind == "leaf" and a.leaf_type == b.leaf_type:
+        return a
+    return VNode("leaf", leaf_type="VARIANT")
+
+
+def _fits(b: VNode, t: VNode) -> bool:
+    """True when casting by ``t`` (``_cast_ddl``) keeps every value a
+    corpus with merged schema ``b`` holds and plans the same columns:
+    no new key, no typed leaf of another type. Anything fits a VARIANT
+    position of ``t`` (its stats decide), and an all-null leaf fits
+    anything but an object: cast by itself, it is a column of its own
+    (tagged ``none``) where ``t`` flattens the object into its keys."""
+    if t.kind == "leaf" and _cast_ddl(t) == "variant":
+        return True
+    if _void(b):
+        return t.kind != "object"
+    if b.kind != t.kind:
+        return False
+    if b.kind == "object":
+        return all(k in t.fields and _fits(c, t.fields[k]) for k, c in b.fields.items())
+    if b.kind == "array":
+        return _fits(b.element, t.element)
+    return _cast_ddl(b) == _cast_ddl(t)
+
+
+@dataclass(frozen=True)
+class Analysis:
+    """What planning a corpus needs: its merged schema tree (cast by
+    ``_cast_ddl``) and the class set and object-branch schema of its
+    VARIANT positions, keyed by JSON path
+    (operators/relationalize.py:_position_stats)."""
+
+    tree: VNode
+    stats: dict[tuple, tuple]
+    #: ``_observe``'s columns, per name of the variant column they read
+    _columns: dict = field(default_factory=dict, compare=False, repr=False)
+
+    @functools.cached_property
+    def positions(self) -> list[tuple]:
+        """Every VARIANT position planning from this state looks up,
+        including ones ``stats`` does not hold."""
+        roots = _cast_positions(self.tree, ())
+        return list(dict.fromkeys(p for r in roots for p in _lookups(r, self.stats)))
+
+    def fits(self, tree: VNode, stats: dict[tuple, tuple]) -> bool:
+        """True when a batch with merged schema ``tree`` and, at
+        ``positions``, the stats ``stats`` is planned exactly by this
+        state: it fits the tree, and at every position it shows no
+        class and no object key the state lacks."""
+
+        def covered(path: tuple, observed: set, obj: VNode | None) -> bool:
+            if path not in self.stats:
+                return False
+            known, known_obj = self.stats[path]
+            return observed <= known and ("obj" not in observed or _fits(obj, known_obj))
+
+        return _fits(tree, self.tree) and all(
+            covered(p, *stats[p]) for p in self.positions
+        )
+
+    def merge(self, tree: VNode, stats: dict[tuple, tuple]) -> "Analysis":
+        """This state joined with another corpus's tree and stats."""
+        out = dict(self.stats)
+        for p, (observed, obj) in stats.items():
+            if p in out:
+                known, known_obj = out[p]
+                observed = known | observed
+                if known_obj is not None:
+                    obj = known_obj if obj is None else _join(known_obj, obj)
+            out[p] = (observed, obj)
+        return Analysis(_join(self.tree, tree), out)
+
+
+def _observe(vdf: DataFrame, vcol: str, prior: Analysis) -> tuple[VNode, dict]:
+    """ONE eager action over the parse ``vdf``: its whole-object merged
+    schema and, at every position ``prior`` plans, its class set and
+    object-branch schema. The positions are read off the parse with
+    ``_values_at``, so no typed frame is needed first."""
+    if vcol not in prior._columns:
+        # built once per state: a stream observes each batch through
+        # the same expressions, and building them is py4j-bound
+        types = {vcol: VariantType()}
+
+        def tagged(i: int, values: Column) -> Column:
+            return F.transform(values, lambda x: F.struct(F.lit(i).alias("p"), x.alias("v")))
+
+        pv = F.explode(_flat(F.array(*[
+            tagged(i, _values_at(types, (vcol,) + path))
+            for i, path in enumerate([(), *prior.positions])
+        ]))).alias("pv")
+        # position 0 is the whole object: no class, and every row merges
+        p, v = F.col("pv.p"), F.col("pv.v")
+        prior._columns[vcol] = pv, p.alias("p"), [
+            F.collect_set(F.when(p != 0, _value_class(v))).alias("cset"),
+            F.schema_of_variant_agg(
+                F.when((p == 0) | (_value_class(v) == "obj"), v)
+            ).alias("os"),
+        ]
+    pv, p, aggs = prior._columns[vcol]
+    got = {r["p"]: r for r in vdf.select(pv).groupBy(p).agg(*aggs).collect()}
+    # no row at all merges to VOID, as the ungrouped merge does
+    tree = parse_variant_schema(got[0]["os"] if 0 in got else "VOID")
+    stats = {}
+    for i, path in enumerate(prior.positions, 1):
+        r = got.get(i)
+        stats[path] = (
+            (set(r["cset"]), parse_variant_schema(r["os"]) if r["os"] else None)
+            if r is not None
+            else (set(), None)
+        )
+    return tree, stats
+
+
+#: persisted typed frames by ``semanticHash()``: Spark keeps one cache
+#: entry for equal plans, so two results over the same corpus share it,
+#: and only the last one to release it may unpersist it
+_holders: dict[int, int] = {}
+_holders_lock = threading.Lock()
+
+
+def _hold(df: DataFrame) -> DataFrame:
+    key = df.semanticHash()
+    with _holders_lock:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        _holders[key] = _holders.get(key, 0) + 1
+    return df
+
+
+def _release(df: DataFrame) -> None:
+    key = df.semanticHash()
+    with _holders_lock:
+        _holders[key] -= 1
+        if not _holders[key]:
+            del _holders[key]
+            df.unpersist()
+
+
 @dataclass
 class RelationalizedJson:
     """Output of the end-to-end dynamic pipeline: one flat, converted
-    DataFrame per discovered table plus its choice Schema."""
+    DataFrame per discovered table plus its choice Schema, and the
+    analysis of everything seen so far (pass it as the next batch's
+    ``prior``)."""
 
     tables: dict[str, DataFrame]
     schemas: dict[str, Schema]
+    analysis: Analysis
     _typed: DataFrame | None = None
 
     def __getitem__(self, name: str) -> DataFrame:
@@ -173,9 +351,12 @@ class RelationalizedJson:
     def unpersist(self) -> None:
         """Release the cached typed frame the tables read (call after
         they have been written; further reads of them would re-parse
-        and re-cast the JSON). A caller-supplied source is untouched."""
+        and re-cast the JSON). The cache stays while another result
+        over the same corpus still holds it; a second call does
+        nothing. A caller-supplied source is untouched."""
         if self._typed is not None:
-            self._typed.unpersist()
+            _release(self._typed)
+            self._typed = None
 
 
 def relationalize_json(
@@ -186,6 +367,7 @@ def relationalize_json(
     key_cols: list[str] | None = None,
     convert: bool = True,
     rid_mode: str = "hash",
+    prior: Analysis | None = None,
 ) -> RelationalizedJson:
     """Full dynamic pipeline: JSONL path (or variant DataFrame) ->
     rid-linked flat tables with choice columns resolved.
@@ -200,15 +382,27 @@ def relationalize_json(
     stats' tags make ``infer_and_convert`` scan-free. All per-row work
     is JVM-side variant casts and projections.
 
+    ``prior`` is the ``analysis`` of the batches before this one (a
+    stream). The merge then also reads this batch's class set and
+    object-branch schema at every position ``prior`` plans, in the
+    same action (``_observe``). When both fit inside ``prior`` (no new
+    key, no typed leaf turned conflicted, no new class, no new object
+    key; an all-null leaf fits anything but an object), the tables are
+    planned from ``prior``, with no stats round: one eager action in
+    all. Otherwise the batch is analysed and planned as without
+    ``prior``, and the result's ``analysis`` is ``prior`` merged with
+    what it showed.
+
     The pipeline is inherently multi-pass (schema union needs every
     row before the typed cast exists — same reason the reference
     iterates the file twice, ref README.md:60-77). The merge reads the
     source; the typed frame — each object cast once to the merged
     struct — is persisted MEMORY_AND_DISK, filled by the stats round
-    and left cached for the caller's materialization, so every table
-    reads struct columns instead of re-running the whole-object cast.
-    Call ``.unpersist()`` on the result after writing the tables. A
-    caller-supplied ``source`` is never persisted or released here.
+    (or, without one, by the first table read) and left cached for the
+    caller's materialization, so every table reads struct columns
+    instead of re-running the whole-object cast. Call ``.unpersist()``
+    on the result after writing the tables. A caller-supplied
+    ``source`` is never persisted or released here.
     """
     if isinstance(source, str):
         if spark is None:
@@ -217,11 +411,6 @@ def relationalize_json(
     else:
         vdf = source
     [vcol] = vdf.columns
-    tree = merged_variant_schema(vdf, vcol)
-    if tree.kind != "object":
-        raise ValueError(
-            f"top-level JSON must be objects, got {tree.kind} ({tree.leaf_type})"
-        )
 
     # JSON keys are case-sensitive (the reference's Python dicts treat
     # "col" and "Col" as distinct; its drop_duplicate_columns exists
@@ -230,16 +419,33 @@ def relationalize_json(
     # AMBIGUOUS_REFERENCE while we build the plans, so flip the session
     # to case-sensitive for the (eager) analysis phase and restore.
     with session_conf(vdf.sparkSession, "spark.sql.caseSensitive", "true"):
-        typed = vdf.select(
-            F.try_variant_get(F.col(vcol), "$", _cast_ddl(tree)).alias("__r__")
-        ).select("__r__.*").persist(StorageLevel.MEMORY_AND_DISK)
+        if prior is None:
+            tree, seen = merged_variant_schema(vdf, vcol), {}
+        else:
+            tree, seen = _observe(vdf, vcol, prior)
+        if tree.kind != "object":
+            raise ValueError(
+                f"top-level JSON must be objects, got {tree.kind} ({tree.leaf_type})"
+            )
+        stable = prior is not None and prior.fits(tree, seen)
+        plan = prior if stable else Analysis(tree, {})
+        typed = _hold(vdf.select(
+            F.try_variant_get(F.col(vcol), "$", _cast_ddl(plan.tree)).alias("__r__")
+        ).select("__r__.*"))
+        stats = dict(plan.stats)
         try:
-            tables, schemas = _plan_tables(typed, name, key_cols, convert, rid_mode)
+            tables, schemas = _plan_tables(typed, name, key_cols, convert, rid_mode, stats)
         except BaseException:
             # no RelationalizedJson reaches the caller to release it
-            typed.unpersist()
+            _release(typed)
             raise
-    return RelationalizedJson(tables, schemas, _typed=typed)
+    if stable:
+        analysis = prior
+    elif prior is None:
+        analysis = Analysis(tree, stats)
+    else:
+        analysis = prior.merge(tree, {**seen, **stats})
+    return RelationalizedJson(tables, schemas, analysis, _typed=typed)
 
 
 def _plan_tables(
@@ -248,12 +454,15 @@ def _plan_tables(
     key_cols: list[str] | None,
     convert: bool,
     rid_mode: str,
+    stats: dict[tuple, tuple],
 ) -> tuple[dict[str, DataFrame], dict[str, Schema]]:
-    """``relationalize_json``'s stats round and planning over its
-    persisted typed frame; the first action fills the cache."""
+    """``relationalize_json``'s stats round (for the positions
+    ``stats`` lacks; it fills them in) and planning over its persisted
+    typed frame; the first action fills the cache."""
     hints: dict[str, dict[str, str]] = {}
     raw_tables = relationalize(
-        typed, name, key_cols=key_cols, rid_mode=rid_mode, infer_hints=hints
+        typed, name, key_cols=key_cols, rid_mode=rid_mode, infer_hints=hints,
+        position_stats=stats,
     )
     tables: dict[str, DataFrame] = {}
     schemas: dict[str, Schema] = {}

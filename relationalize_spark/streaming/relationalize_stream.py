@@ -23,6 +23,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +33,9 @@ from pyspark.sql.streaming import DataStreamWriter
 from ..operators.relationalize import _q, _type_positions, relationalize
 from ..plans.session import session_conf
 from ..schema import Schema
+
+if TYPE_CHECKING:
+    from ..sources.jsonl import Analysis
 
 TableSink = Callable[[str, DataFrame, int], None]
 
@@ -205,11 +209,22 @@ class JsonStreamDemux:
     duplicated view.
 
     Scale shape: per batch this is the batch pipeline (projections
-    over the batch's cached typed frame after two analysis actions:
-    the whole-object merge over the parse and one path-keyed stats
-    round, which fills the cache); the running schemas are
-    driver-side dicts of column tags — O(columns), not O(rows) — and
-    the per-batch persistence is one tiny metadata file per table.
+    over the batch's cached typed frame), planned against a running
+    analysis: the merged schema tree and position stats of the batches
+    landed so far (sources/jsonl.py:Analysis). Each batch makes one
+    analysis action over its parse that merges the batch's whole
+    objects and reads the class set and object-branch schema at every
+    VARIANT position of the running analysis. A structure-stable batch
+    — no new key, no typed leaf turned conflicted, no new class at a
+    position, no new object key — is planned from the running
+    analysis with no stats round, and its first table write fills the
+    cache. A batch that drifts runs the bulk path's path-keyed stats
+    round too, and its result merges into the running analysis; the
+    check runs before any write, so schema-before-rows holds as is. A
+    restarted instance starts with no running analysis, so its first
+    batch takes the drifting path. The running schemas are driver-side
+    dicts of column tags — O(columns), not O(rows) — and the per-batch
+    persistence is one tiny metadata file per table.
 
     MICRO-BATCH SIZING (measured, BASELINE.md r8): per-batch latency
     scales with DISCOVERED TABLE COUNT (one Catalyst analysis + one
@@ -246,6 +261,10 @@ class JsonStreamDemux:
     _written_schemas: dict[str, str] = field(
         default_factory=dict, init=False, repr=False
     )
+    #: merged schema tree and position stats of the batches landed so
+    #: far (sources/jsonl.py:Analysis), the ``prior`` of the next batch;
+    #: driver-only — a restarted instance starts without it
+    _analysis: Analysis | None = field(default=None, init=False, repr=False)
 
     def _parse_schema(self, content: str, path_str: str) -> Schema:
         try:
@@ -380,7 +399,8 @@ class JsonStreamDemux:
             else:
                 batch_df = lines.select(F.parse_json(F.col(col)).alias("v"))
         out = relationalize_json(
-            batch_df, self.name, key_cols=self.key_cols, convert=False
+            batch_df, self.name, key_cols=self.key_cols, convert=False,
+            prior=self._analysis,
         )
         # JSON keys are case-sensitive (the reference keeps "w1" and
         # "W1" distinct until drop_duplicate_columns is asked for);
@@ -424,6 +444,7 @@ class JsonStreamDemux:
                     # list() drains the map so the first failure
                     # raises AFTER the pool joins (no stranded tasks)
                     list(ex.map(write_one, out.tables))
+            self._analysis = out.analysis
         finally:
             out.unpersist()
 

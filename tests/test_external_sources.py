@@ -88,6 +88,26 @@ def test_jsonl_to_tables_releases_its_cache(spark, tmp_path):
     assert persisted().size() == before
 
 
+def test_results_over_one_file_share_their_cache(spark, tmp_path):
+    """Two results over the same file share one Spark cache entry; the
+    first release leaves it to the other, the last one drops it."""
+    path = str(tmp_path / "users.jsonl")
+    export_documents_to_jsonl(MONGO_DOCS, path)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    a = jsonl_to_tables(spark, path, "users")
+    b = jsonl_to_tables(spark, path, "users")
+    assert a["users"].count() == b["users"].count() == 2
+    assert persisted().size() == before + 1
+    a.unpersist()
+    assert persisted().size() == before + 1
+    assert b["users_tags"].count() == 2
+    a.unpersist()  # a second release of the same result does nothing
+    assert persisted().size() == before + 1
+    b.unpersist()
+    assert persisted().size() == before
+
+
 POKE_LISTING = {
     "results": [
         {"name": "bulbasaur", "url": "https://api/pokemon/1"},

@@ -182,6 +182,28 @@ def test_mixed_array_elements_choice_via_fused_analysis(spark):
     assert parent[1]["v_str"] and parent[1]["v_str"].startswith("R_")
 
 
+def _collect_callers(monkeypatch, df) -> list[str]:
+    """From now on, append to the returned list the file name of the
+    first caller outside pyspark of every ``DataFrame.collect`` (which
+    ``first``/``head`` also reach)."""
+    import traceback
+
+    pyspark_dir = os.path.dirname(pyspark.__file__)
+    callers = []
+    collect = type(df).collect
+
+    def counting_collect(self):
+        frame = next(
+            f for f in reversed(traceback.extract_stack()[:-1])
+            if not f.filename.startswith(pyspark_dir)
+        )
+        callers.append(os.path.basename(frame.filename))
+        return collect(self)
+
+    monkeypatch.setattr(type(df), "collect", counting_collect)
+    return callers
+
+
 @pytest.mark.parametrize(
     "objs",
     [
@@ -200,28 +222,14 @@ def test_analysis_is_merge_plus_one_stats_round(spark, objs, monkeypatch):
     """The dynamic pipeline's analysis is TWO eager actions: the
     whole-object merge (sources/jsonl.py) and one path-keyed stats
     round (operators/relationalize.py), with no per-level aggregate
-    after them. Actions are counted at ``DataFrame.collect`` (which
-    ``first``/``head`` also reach) by their first caller outside
-    pyspark, and every Spark job the build launches must come from
-    one of those actions (AQE splits one action into several jobs)."""
-    import traceback
-
+    after them. Actions are counted at ``DataFrame.collect`` by their
+    first caller outside pyspark, and every Spark job the build
+    launches must come from one of those actions (AQE splits one
+    action into several jobs)."""
     df = vdf(spark, objs)
-    pyspark_dir = os.path.dirname(pyspark.__file__)
-    callers = []
-    collect = type(df).collect
-
-    def counting_collect(self):
-        frame = next(
-            f for f in reversed(traceback.extract_stack()[:-1])
-            if not f.filename.startswith(pyspark_dir)
-        )
-        callers.append(os.path.basename(frame.filename))
-        return collect(self)
-
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
-    monkeypatch.setattr(type(df), "collect", counting_collect)
+    callers = _collect_callers(monkeypatch, df)
     out = relationalize_json(df, "root", convert=False)
     monkeypatch.undo()
     out.unpersist()
@@ -237,6 +245,34 @@ def test_analysis_is_merge_plus_one_stats_round(spark, objs, monkeypatch):
     # every job came from a counted action (Spark names its stages
     # after the counting wrapper, the first frame outside pyspark)
     assert sites and all(__file__ in s for s in sites), sites
+
+
+def test_stable_demux_batch_skips_the_stats_round(spark, tmp_path, monkeypatch):
+    """A demux batch whose merged schema and position stats fit the
+    analysis of the batches before it is planned from that analysis:
+    one analysis action (the merge, which also reads the positions)
+    and no stats round. A batch that drifts keeps both actions."""
+    from relationalize_spark.streaming.relationalize_stream import JsonStreamDemux
+
+    def batch(objs):
+        return spark.createDataFrame([(json.dumps(o),) for o in objs], "value string")
+
+    demux = JsonStreamDemux(str(tmp_path / "out"), "root", key_cols=["k"])
+    demux.process_batch(batch([
+        {"k": 1, "v": 10}, {"k": 2, "v": [1, 2]}, {"k": 3, "v": {"a": 1, "b": "p"}},
+    ]), 0)
+    callers = _collect_callers(monkeypatch, spark.range(1))
+    # fewer classes and keys than batch 0, and an all-null leaf
+    demux.process_batch(batch([{"k": 4, "v": [3]}, {"k": 5, "v": {"a": None}}]), 1)
+    assert callers == ["jsonl.py"], callers
+    callers.clear()
+    # a new key inside v's object branch
+    demux.process_batch(batch([{"k": 6, "v": {"a": 2, "c": True}}, {"k": 7, "v": 3}]), 2)
+    assert callers == ["jsonl.py", "relationalize.py"], callers
+    monkeypatch.undo()
+    assert demux.schemas["root"].columns == {
+        "k": "int", "v": "c-int-str", "v_a": "int", "v_b": "str", "v_c": "bool",
+    }
 
 
 def test_none_lattice_through_pipeline(spark):

@@ -66,6 +66,12 @@ def test_compact_files_reduces_file_count(spark, tmp_path):
     )
 
 
+def test_session_has_no_call_site_capture(spark):
+    """get_spark turns PySpark's per-Column call-site capture off (it
+    more than doubles a micro-batch's py4j round trips)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 def test_session_conf_restored_after_exception(spark):
     """session_conf puts back what it found — a value, or no value at
     all — when the scope raises. Conf reads only; no Spark job."""
