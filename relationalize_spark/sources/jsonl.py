@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import functools
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -218,17 +218,42 @@ def _fits(b: VNode, t: VNode) -> bool:
     return _cast_ddl(b) == _cast_ddl(t)
 
 
+def _reaches(t: VNode, b: VNode | None) -> bool:
+    """True when a corpus with merged schema ``b`` (None: it has no
+    value there) holds an array at every array of ``t``: planning by
+    ``t`` then splits out no child table the corpus has no rows for."""
+    if t.kind == "array":
+        return b is not None and b.kind == "array" and _reaches(t.element, b.element)
+    if t.kind == "object":
+        fields = b.fields if b is not None and b.kind == "object" else {}
+        return all(_reaches(c, fields.get(k)) for k, c in t.fields.items())
+    return True
+
+
+#: consecutive batches that did not fit after which a stream stops
+#: reading the running analysis's positions (``_observe``) until a
+#: batch adds nothing to it: one drift is a stream event (a key
+#: appears), a second in a row a stream that has not settled, whose
+#: batches would pay the position reads and the stats round both
+_MAX_DRIFTS = 2
+
+
 @dataclass(frozen=True)
 class Analysis:
     """What planning a corpus needs: its merged schema tree (cast by
     ``_cast_ddl``) and the class set and object-branch schema of its
     VARIANT positions, keyed by JSON path
-    (operators/relationalize.py:_position_stats)."""
+    (operators/relationalize.py:_position_stats); and, for a stream,
+    how many batches in a row did not fit it."""
 
     tree: VNode
     stats: dict[tuple, tuple]
-    #: ``_observe``'s columns, per name of the variant column they read
-    _columns: dict = field(default_factory=dict, compare=False, repr=False)
+    drifts: int = field(default=0, compare=False)
+    #: ``observer``'s columns per variant column name: a stream reads
+    #: every batch through the same ones, and building them costs
+    #: ~520 py4j round trips (~0.09 s) per batch of the stream
+    #: benchmark's shape, against ~25 when they are reused
+    _observers: dict = field(default_factory=dict, compare=False, repr=False)
 
     @functools.cached_property
     def positions(self) -> list[tuple]:
@@ -241,20 +266,57 @@ class Analysis:
         """True when a batch with merged schema ``tree`` and, at
         ``positions``, the stats ``stats`` is planned exactly by this
         state: it fits the tree, and at every position it shows no
-        class and no object key the state lacks."""
+        class and no object key the state lacks; and it reaches every
+        child table the state splits out — each array of the tree, and
+        each position's array branch and the arrays of its object
+        branch — so planning by the state writes no table the batch
+        has no rows for."""
 
         def covered(path: tuple, observed: set, obj: VNode | None) -> bool:
             if path not in self.stats:
                 return False
             known, known_obj = self.stats[path]
-            return observed <= known and ("obj" not in observed or _fits(obj, known_obj))
+            return (
+                observed <= known
+                and ("obj" not in observed or _fits(obj, known_obj))
+                and ("arr" not in known or "arr" in observed)
+                and ("obj" not in known or _reaches(known_obj, obj))
+            )
 
-        return _fits(tree, self.tree) and all(
-            covered(p, *stats[p]) for p in self.positions
+        return (
+            _fits(tree, self.tree)
+            and _reaches(self.tree, tree)
+            and all(covered(p, *stats[p]) for p in self.positions)
         )
 
+    def observer(self, vcol: str) -> tuple[Column, Column, list[Column]]:
+        """``_observe``'s generator, group key and aggregates over a
+        parse whose variant column is ``vcol``; built once per state."""
+        if vcol not in self._observers:
+            types = {vcol: VariantType()}
+
+            def tagged(i: int, values: Column) -> Column:
+                return F.transform(
+                    values, lambda x: F.struct(F.lit(i).alias("p"), x.alias("v"))
+                )
+
+            pv = F.explode(_flat(F.array(*[
+                tagged(i, _values_at(types, (vcol,) + path))
+                for i, path in enumerate([(), *self.positions])
+            ]))).alias("pv")
+            # position 0 is the whole object: no class, and every row merges
+            p, v = F.col("pv.p"), F.col("pv.v")
+            self._observers[vcol] = pv, p.alias("p"), [
+                F.collect_set(F.when(p != 0, _value_class(v))).alias("cset"),
+                F.schema_of_variant_agg(
+                    F.when((p == 0) | (_value_class(v) == "obj"), v)
+                ).alias("os"),
+            ]
+        return self._observers[vcol]
+
     def merge(self, tree: VNode, stats: dict[tuple, tuple]) -> "Analysis":
-        """This state joined with another corpus's tree and stats."""
+        """This state joined with the tree and stats of a batch that
+        did not fit it (one more drift)."""
         out = dict(self.stats)
         for p, (observed, obj) in stats.items():
             if p in out:
@@ -263,7 +325,13 @@ class Analysis:
                 if known_obj is not None:
                     obj = known_obj if obj is None else _join(known_obj, obj)
             out[p] = (observed, obj)
-        return Analysis(_join(self.tree, tree), out)
+        return Analysis(_join(self.tree, tree), out, self.drifts + 1)
+
+    def settled(self) -> "Analysis":
+        """This state with no drift counted."""
+        if not self.drifts:
+            return self
+        return replace(self, drifts=0, _observers=self._observers)
 
 
 def _observe(vdf: DataFrame, vcol: str, prior: Analysis) -> tuple[VNode, dict]:
@@ -271,27 +339,7 @@ def _observe(vdf: DataFrame, vcol: str, prior: Analysis) -> tuple[VNode, dict]:
     schema and, at every position ``prior`` plans, its class set and
     object-branch schema. The positions are read off the parse with
     ``_values_at``, so no typed frame is needed first."""
-    if vcol not in prior._columns:
-        # built once per state: a stream observes each batch through
-        # the same expressions, and building them is py4j-bound
-        types = {vcol: VariantType()}
-
-        def tagged(i: int, values: Column) -> Column:
-            return F.transform(values, lambda x: F.struct(F.lit(i).alias("p"), x.alias("v")))
-
-        pv = F.explode(_flat(F.array(*[
-            tagged(i, _values_at(types, (vcol,) + path))
-            for i, path in enumerate([(), *prior.positions])
-        ]))).alias("pv")
-        # position 0 is the whole object: no class, and every row merges
-        p, v = F.col("pv.p"), F.col("pv.v")
-        prior._columns[vcol] = pv, p.alias("p"), [
-            F.collect_set(F.when(p != 0, _value_class(v))).alias("cset"),
-            F.schema_of_variant_agg(
-                F.when((p == 0) | (_value_class(v) == "obj"), v)
-            ).alias("os"),
-        ]
-    pv, p, aggs = prior._columns[vcol]
+    pv, p, aggs = prior.observer(vcol)
     got = {r["p"]: r for r in vdf.select(pv).groupBy(p).agg(*aggs).collect()}
     # no row at all merges to VOID, as the ungrouped merge does
     tree = parse_variant_schema(got[0]["os"] if 0 in got else "VOID")
@@ -387,11 +435,16 @@ def relationalize_json(
     object-branch schema at every position ``prior`` plans, in the
     same action (``_observe``). When both fit inside ``prior`` (no new
     key, no typed leaf turned conflicted, no new class, no new object
-    key; an all-null leaf fits anything but an object), the tables are
-    planned from ``prior``, with no stats round: one eager action in
-    all. Otherwise the batch is analysed and planned as without
+    key; an all-null leaf fits anything but an object) and the batch
+    has rows for every child table ``prior`` splits out, the tables
+    are planned from ``prior``, with no stats round: one eager action
+    in all. Otherwise the batch is analysed and planned as without
     ``prior``, and the result's ``analysis`` is ``prior`` merged with
-    what it showed.
+    what it showed. After ``_MAX_DRIFTS`` such batches in a row the
+    positions are not read (the merge runs alone, as without
+    ``prior``) until a batch adds nothing to ``prior`` and has rows for
+    its typed arrays: a stream that keeps drifting would pay the
+    position reads on top of the stats round.
 
     The pipeline is inherently multi-pass (schema union needs every
     row before the typed cast exists — same reason the reference
@@ -419,15 +472,16 @@ def relationalize_json(
     # AMBIGUOUS_REFERENCE while we build the plans, so flip the session
     # to case-sensitive for the (eager) analysis phase and restore.
     with session_conf(vdf.sparkSession, "spark.sql.caseSensitive", "true"):
-        if prior is None:
-            tree, seen = merged_variant_schema(vdf, vcol), {}
-        else:
+        observe = prior is not None and prior.drifts < _MAX_DRIFTS
+        if observe:
             tree, seen = _observe(vdf, vcol, prior)
+        else:
+            tree, seen = merged_variant_schema(vdf, vcol), {}
         if tree.kind != "object":
             raise ValueError(
                 f"top-level JSON must be objects, got {tree.kind} ({tree.leaf_type})"
             )
-        stable = prior is not None and prior.fits(tree, seen)
+        stable = observe and prior.fits(tree, seen)
         plan = prior if stable else Analysis(tree, {})
         typed = _hold(vdf.select(
             F.try_variant_get(F.col(vcol), "$", _cast_ddl(plan.tree)).alias("__r__")
@@ -439,12 +493,17 @@ def relationalize_json(
             # no RelationalizedJson reaches the caller to release it
             _release(typed)
             raise
-    if stable:
-        analysis = prior
-    elif prior is None:
+    if prior is None:
         analysis = Analysis(tree, stats)
+    elif stable:
+        analysis = prior.settled()
     else:
         analysis = prior.merge(tree, {**seen, **stats})
+        if not observe and analysis == prior and _reaches(prior.tree, tree):
+            # read without the positions, this batch added nothing to
+            # the state and reached its tables: the stream has settled,
+            # and the next batch reads the positions again
+            analysis = prior.settled()
     return RelationalizedJson(tables, schemas, analysis, _typed=typed)
 
 

@@ -216,13 +216,16 @@ class JsonStreamDemux:
     objects and reads the class set and object-branch schema at every
     VARIANT position of the running analysis. A structure-stable batch
     — no new key, no typed leaf turned conflicted, no new class at a
-    position, no new object key — is planned from the running
-    analysis with no stats round, and its first table write fills the
-    cache. A batch that drifts runs the bulk path's path-keyed stats
-    round too, and its result merges into the running analysis; the
-    check runs before any write, so schema-before-rows holds as is. A
-    restarted instance starts with no running analysis, so its first
-    batch takes the drifting path. The running schemas are driver-side
+    position, no new object key, and rows for every child table found
+    so far — is planned from the running analysis with no stats round,
+    and its first table write fills the cache. A batch that drifts
+    runs the bulk path's path-keyed stats round too, and its result
+    merges into the running analysis; the check runs before any write,
+    so schema-before-rows holds as is. After two drifting batches in a
+    row, batches skip the position reads (and so the check) until one
+    adds nothing to the running analysis. A restarted
+    instance starts with no running analysis, so its first batch takes
+    the drifting path. The running schemas are driver-side
     dicts of column tags — O(columns), not O(rows) — and the per-batch
     persistence is one tiny metadata file per table.
 

@@ -275,6 +275,53 @@ def test_stable_demux_batch_skips_the_stats_round(spark, tmp_path, monkeypatch):
     }
 
 
+def test_demux_batch_writes_only_its_own_tables(spark, tmp_path, monkeypatch):
+    """A batch that lacks one of the running analysis's child tables —
+    a typed array key, a position's array branch, an array inside a
+    position's object branch — takes the drifting path and lands only
+    the tables it has rows for; a batch holding every table is still
+    planned from the running analysis. After two drifting batches in a
+    row the next one is merged without reading the positions; as it
+    adds nothing to the running analysis, the one after is read
+    again."""
+    from relationalize_spark.sources import jsonl
+    from relationalize_spark.streaming.relationalize_stream import JsonStreamDemux
+
+    base = tmp_path / "out"
+    demux = JsonStreamDemux(str(base), "root", key_cols=["k"])
+    observed = []
+    observe = jsonl._observe
+
+    def counting_observe(*args):
+        observed.append(args)
+        return observe(*args)
+
+    monkeypatch.setattr(jsonl, "_observe", counting_observe)
+
+    def landed(objs, batch_id):
+        observed.clear()
+        lines = [(json.dumps(o),) for o in objs]
+        demux.process_batch(spark.createDataFrame(lines, "value string"), batch_id)
+        tables = {t.name for t in base.iterdir() if (t / f"batch={batch_id}").is_dir()}
+        return tables, bool(observed), demux._analysis.drifts
+
+    every = {"root", "root_a", "root_v", "root_w_ys"}
+    assert landed([
+        {"k": 1, "a": [1], "v": [1, 2], "w": {"ys": [1]}},
+        {"k": 2, "a": [2], "v": "s", "w": 1},
+    ], 0) == (every, False, 0)
+    assert landed([{"k": 3, "v": [3], "w": {"ys": [2]}}], 1) == (every - {"root_a"}, True, 1)
+    assert landed([{"k": 4, "a": [4], "v": "u", "w": {"ys": [3]}}], 2) == (
+        every - {"root_v"}, True, 2
+    )
+    assert landed([{"k": 5, "a": [5], "v": [6], "w": 3}], 3) == (
+        every - {"root_w_ys"}, False, 0
+    )
+    callers = _collect_callers(monkeypatch, spark.range(1))
+    assert landed([{"k": 6, "a": [6], "v": [7], "w": {"ys": [4]}}], 4) == (every, True, 0)
+    assert callers == ["jsonl.py"], callers
+
+
 def test_none_lattice_through_pipeline(spark):
     out = relationalize_json(
         vdf(spark, [{"a": None, "b": None}, {"a": 1, "b": None}]), "root"
