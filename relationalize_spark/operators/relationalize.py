@@ -40,7 +40,7 @@ they are *deterministic* — ``md5(table, path, row-key)`` — because a
 nondeterministic uuid() is recomputed differently per Spark task retry
 and would break parent/child linkage without forcing a full
 materialization barrier. ``rid_mode="uuid"`` restores reference
-behavior and transparently caches the intermediate.
+behavior and pins each level's rids with a lazy local checkpoint.
 """
 
 from __future__ import annotations
@@ -410,7 +410,11 @@ def relationalize(
         serialized as JSON — exact duplicate rows would then share
         rids (children join to both); pass a real key at scale.
     rid_mode: ``"hash"`` (deterministic, default) or ``"uuid"``
-        (reference-exact randomness; forces a cache of each level).
+        (reference-exact randomness; each level with split-outs is
+        pinned by a lazy ``localCheckpoint``: its first action stores
+        the rows, every table of the level reads them back, and the
+        blocks go with the returned frames instead of staying in the
+        session's cache).
     infer_hints: optional caller-provided dict, filled with
         ``{table: {column: normalized tag}}`` for variant columns
         whose observed tags the position stats already hold — feed
@@ -530,8 +534,11 @@ def _process(
         tdf = tdf.withColumn(rid_col[p], F.when(has_rid, rid))
     if rid_mode == "uuid" and links:
         # uuid() is nondeterministic: parent and child are separate
-        # actions, so pin the values once.
-        tdf = tdf.cache()
+        # actions, so pin the values once. A local checkpoint, not a
+        # cache: a lost block fails the read instead of recomputing
+        # other uuids, and its blocks go with the frames that read it
+        # (nobody gets this frame to unpersist a cache of it).
+        tdf = tdf.localCheckpoint(eager=False)
 
     parent_cols = []
     for f in tdf.schema.fields:

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..plans.session import each_table
 from ..schema import Schema
 
 
@@ -78,6 +79,16 @@ def write_tables(
     mode: str = "overwrite",
 ) -> None:
     """Write every derived table under ``{base_path}/{table}`` — the
-    batch counterpart of the streaming parquet_table_sink."""
-    for name, df in tables.items():
-        df.write.mode(mode).format(format).save(f"{base_path}/{name}")
+    batch counterpart of the streaming parquet_table_sink.
+
+    The writes run concurrently on the driver pool every multi-table
+    sink shares (``plans.session.each_table``): a small table's write
+    job is mostly driver latency, which the pool overlaps across
+    tables. The first failing table's error (in ``tables`` order)
+    raises once the pool has joined; tables whose write had not
+    started by then are not written."""
+
+    def write(name: str) -> None:
+        tables[name].write.mode(mode).format(format).save(f"{base_path}/{name}")
+
+    list(each_table(write, tables))

@@ -21,7 +21,6 @@ directly:
 from __future__ import annotations
 
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
@@ -31,25 +30,13 @@ from pyspark.sql import types as ST
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.relationalize import _q, _type_positions, relationalize
-from ..plans.session import session_conf
+from ..plans.session import each_table, session_conf
 from ..schema import Schema
 
 if TYPE_CHECKING:
     from ..sources.jsonl import Analysis
 
 TableSink = Callable[[str, DataFrame, int], None]
-
-#: JsonStreamDemux's per-batch table writes run on a driver thread pool
-#: of this size. Part of the per-table per-batch floor is driver latency
-#: (Catalyst analysis + job submission + schema-file write) that
-#: concurrent submission overlaps across tables (Py4J releases the GIL
-#: during JVM calls; writes target disjoint directories; the
-#: schema-before-rows crash invariant is per-table and preserved inside
-#: each task). Measured on the 70-table wide-dynamic corpus, same
-#: session (BASELINE.md r8): steady per-batch 50.0 s serial -> 35.2 s at
-#: 8 threads (1.42x; 16 threads no better — the residue is executor-side
-#: job work plus lock-serialized analysis, not submission latency).
-_WRITE_POOL_SIZE = 8
 
 
 # -- Hadoop-FS text helpers (work on local / HDFS / s3a alike) ---------------
@@ -232,10 +219,10 @@ class JsonStreamDemux:
     MICRO-BATCH SIZING (measured, BASELINE.md r8): per-batch latency
     scales with DISCOVERED TABLE COUNT (one Catalyst analysis + one
     write job + one schema write each), independent of row count —
-    ~0.5 s/table through the fixed 8-thread write pool
-    (``_WRITE_POOL_SIZE``; ~0.7 s/table when submitted serially): a
-    70-table dynamic stream has a ~35 s per-batch floor even at 250
-    rows/batch. Size triggers so the batch interval is well above
+    ~0.5 s/table through the driver pool every multi-table sink shares
+    (``plans.session._WRITE_POOL_SIZE``, 8 threads; ~0.7 s/table when
+    submitted serially): a 70-table dynamic stream has a ~35 s
+    per-batch floor even at 250 rows/batch. Size triggers so the batch interval is well above
     0.5 s x expected table count (multi-minute triggers or
     AvailableNow for wide corpora; rows are effectively free next to
     the per-table floor), and pre-split corpora expected to discover
@@ -442,11 +429,8 @@ class JsonStreamDemux:
 
                 # ... the per-table writes are independent (disjoint
                 # directories, one shared cached typed frame) and
-                # driver-latency bound, so they overlap on a pool.
-                with ThreadPoolExecutor(max_workers=_WRITE_POOL_SIZE) as ex:
-                    # list() drains the map so the first failure
-                    # raises AFTER the pool joins (no stranded tasks)
-                    list(ex.map(write_one, out.tables))
+                # driver-latency bound, so they overlap on the pool.
+                list(each_table(write_one, out.tables))
             self._analysis = out.analysis
         finally:
             out.unpersist()
@@ -459,33 +443,37 @@ class JsonStreamDemux:
         """Typed view of everything landed so far: per table, parse
         the JSONL back to one variant column per merged-schema key and
         split choice columns — the reference's convert pass with the
-        cross-batch schema."""
+        cross-batch schema. The tables are planned concurrently on the
+        driver pool (``plans.session.each_table``): each plan's
+        directory check, file listing and analysis is driver latency.
+        The returned dict keeps ``schemas``' table order."""
         from ..operators.infer import convert_choice_columns
 
         self._recover(spark)
-        tables: dict[str, DataFrame] = {}
+
+        def plan(t: str) -> DataFrame:
+            tdir = f"{self.base_path}/{t}"
+            # every batch=N subdir, read without partition discovery
+            # (no `batch` column); the read skips _-prefixed metadata.
+            # A dir with only _schema.json (crash before the first
+            # landing) has no rows to read.
+            if _fs_has_data_files(spark, tdir):
+                lines = spark.read.option("recursiveFileLookup", "true").text(tdir)
+            else:
+                lines = spark.createDataFrame([], "value string")
+            lines = lines.where(F.length(F.trim("value")) > 0)
+            cols = self.schemas[t].columns
+            ddl = ", ".join(f"{_q(c)}: variant" for c in cols)
+            flat = lines.select(
+                F.try_variant_get(F.parse_json("value"), "$", f"struct<{ddl}>").alias(
+                    "__r__"
+                )
+            ).select("__r__.*")
+            return convert_choice_columns(flat, cols)
+
+        names = list(self.schemas)
         with session_conf(spark, "spark.sql.caseSensitive", "true"):
-            for t, schema in self.schemas.items():
-                tdir = f"{self.base_path}/{t}"
-                # every batch=N subdir, read without partition
-                # discovery (no `batch` column); the read skips
-                # _-prefixed metadata. A dir with only _schema.json
-                # (crash before the first landing) has no rows to read.
-                if _fs_has_data_files(spark, tdir):
-                    lines = spark.read.option("recursiveFileLookup", "true").text(
-                        tdir
-                    )
-                else:
-                    lines = spark.createDataFrame([], "value string")
-                lines = lines.where(F.length(F.trim("value")) > 0)
-                ddl = ", ".join(f"{_q(c)}: variant" for c in schema.columns)
-                flat = lines.select(
-                    F.try_variant_get(
-                        F.parse_json("value"), "$", f"struct<{ddl}>"
-                    ).alias("__r__")
-                ).select("__r__.*")
-                tables[t] = convert_choice_columns(flat, schema.columns)
-        return tables
+            return dict(zip(names, each_table(plan, names)))
 
     def read_quarantine(
         self, spark: SparkSession, *, dedup_replays: bool = True

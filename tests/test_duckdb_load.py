@@ -75,6 +75,31 @@ def test_load_names_zero_column_table(spark, tmp_path):
     assert con.execute("SELECT count(*) FROM duckdb_tables()").fetchone()[0] == 0
 
 
+def test_load_validates_every_table_before_the_first_create(spark, tmp_path):
+    # a bad table k must not leave tables 1..k-1 loaded
+    con = duckdb.connect()
+    good = spark.createDataFrame([(1, "a")], "id long, s string")
+    with pytest.raises(ValueError, match="table 'root' has no columns"):
+        load_tables_to_duckdb(
+            {"good": good, "root": spark.range(1).select()}, con, tmp_dir=str(tmp_path)
+        )
+    nested = spark.createDataFrame([(1, [1, 2])], "id long, xs array<int>")
+    with pytest.raises(ValueError, match="table 'bad' has non-relational"):
+        load_tables_to_duckdb({"good": good, "bad": nested}, con, tmp_dir=str(tmp_path))
+    assert con.execute("SELECT count(*) FROM duckdb_tables()").fetchone()[0] == 0
+
+
+def test_load_counts_follow_input_order(spark, tmp_path):
+    # the loads overlap on the driver pool; counts keep the dict's order
+    base = spark.range(12)
+    tables = {f"t{n}": base.where(f"id < {n}") for n in (9, 2, 11, 0, 5, 7, 1, 3, 10, 4)}
+    con = duckdb.connect()
+    counts = load_tables_to_duckdb(tables, con, tmp_dir=str(tmp_path))
+    assert list(counts.items()) == [(name, int(name[1:])) for name in tables]
+    for name, n in counts.items():
+        assert con.execute(f"SELECT count(*) FROM main.{name}").fetchone()[0] == n
+
+
 # One row per edge: the extremes, then an all-null row. Spark's session
 # time zone is UTC (plans/session.py), so the TIMESTAMP literals are
 # UTC instants.

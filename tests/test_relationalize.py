@@ -227,6 +227,33 @@ def test_uuid_mode(spark):
     assert RID_RE.match(parent["xs"])
 
 
+def test_uuid_mode_leaves_no_cache_and_keeps_links(spark):
+    """uuid rids are pinned per level without a CacheManager entry that
+    nobody frees, and every child row still finds exactly one parent
+    row by its rid."""
+    spark.catalog.clearCache()  # entries earlier tests left are not this test's
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    df = spark.createDataFrame(
+        [(1, [[1, 2], [3]], [4, 5]), (2, [[6], []], []), (3, None, [7])],
+        "id long, a array<array<int>>, b array<int>",
+    )
+    out = relationalize(df, "root", key_cols=["id"], rid_mode="uuid")
+    assert set(out) == {"root", "root_a", "root_a__val_", "root_b"}
+    counts = {n: t.count() for n, t in out.items()}
+    assert counts == {"root": 3, "root_a": 4, "root_a__val_": 4, "root_b": 3}
+    assert cache.isEmpty()
+    for parent, col, child in (
+        ("root", "a", "root_a"),
+        ("root", "b", "root_b"),
+        ("root_a", "a__val_", "root_a__val_"),
+    ):
+        p, c = out[parent], out[child]
+        # every child row joins one parent row, and parent rids are unique
+        assert p.join(c, p[f"`{col}`"] == c[f"`{col}__rid_`"]).count() == counts[child]
+        rids = p.select(col).where(p[f"`{col}`"].isNotNull())
+        assert rids.distinct().count() == rids.count()
+
+
 def test_weird_column_names(spark):
     """JSON keys with dots, spaces, and backticks must survive the
     schema-driven flatten/explode planning."""

@@ -1,6 +1,8 @@
 """Sinks (jsonl/csv/parquet/jdbc-DDL) and multimodal plumbing tests."""
 
 import glob
+import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,6 +66,83 @@ def test_write_tables(spark, small, tmp_path):
     write_tables({"t1": small, "t2": small}, str(tmp_path / "tabs"))
     assert spark.read.parquet(str(tmp_path / "tabs" / "t1")).count() == 2
     assert spark.read.parquet(str(tmp_path / "tabs" / "t2")).count() == 2
+
+
+def _tables_of(spark, small):
+    return {
+        "t1": small,
+        "t2": small.where("zid > 1"),
+        "t3": small.select("alpha"),
+        "t4": spark.range(5).withColumnRenamed("id", "n"),
+    }
+
+
+def _data_files(path):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, fs in os.walk(path)
+        for f in fs
+        if not f.startswith((".", "_")) or f == "_SUCCESS"
+    )
+
+
+def test_write_tables_matches_one_by_one_writes(spark, small, tmp_path):
+    """The pooled writer lands the same tables, files and rows as
+    writing each table by itself."""
+    tables = _tables_of(spark, small)
+    pooled, serial = str(tmp_path / "pooled"), str(tmp_path / "serial")
+    write_tables(tables, pooled)
+    for name, df in tables.items():
+        write_parquet(df, f"{serial}/{name}")
+    assert sorted(os.listdir(pooled)) == sorted(tables)
+    for name in tables:
+        got = spark.read.parquet(f"{pooled}/{name}")
+        want = spark.read.parquet(f"{serial}/{name}")
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
+        # part files carry a per-write uuid; compare the layout by count
+        files = _data_files(f"{pooled}/{name}")
+        assert len(files) == len(_data_files(f"{serial}/{name}"))
+        assert "_SUCCESS" in files
+
+
+def test_write_tables_raises_the_failing_tables_error_after_the_pool_joins(
+    spark, small, tmp_path
+):
+    tables = _tables_of(spark, small)
+    tables["t2"] = small.select(
+        F.when(F.col("zid") > 0, F.raise_error(F.lit("t2 cannot be written")))
+        .otherwise(F.col("alpha"))
+        .alias("alpha")
+    )
+    before = set(threading.enumerate())
+    base = str(tmp_path / "tabs")
+    with pytest.raises(Exception, match="t2 cannot be written"):
+        write_tables(tables, base)
+    assert set(threading.enumerate()) <= before
+    # the tables around the failing one were submitted with it and
+    # finished before the error surfaced
+    for name in ("t1", "t3", "t4"):
+        assert os.path.exists(f"{base}/{name}/_SUCCESS")
+    assert not os.path.exists(f"{base}/t2/_SUCCESS")
+
+
+def test_write_tables_jobs_carry_the_callers_job_group(spark, small, tmp_path):
+    """Local properties reach the pool threads: every job of a pooled
+    write_tables call belongs to the caller's job group."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    group = "write-tables-job-group"
+    first = jsc.dagScheduler().numTotalJobs()
+    sc.setJobGroup(group, "pooled write_tables")
+    try:
+        write_tables(_tables_of(spark, small), str(tmp_path / "tabs"))
+    finally:
+        sc._jsc.clearJobGroup()
+    last = jsc.dagScheduler().numTotalJobs()
+    jsc.listenerBus().waitUntilEmpty()
+    assert last - first >= 4
+    assert sorted(sc.statusTracker().getJobIdsForGroup(group)) == list(range(first, last))
 
 
 def test_jdbc_plan(small):
