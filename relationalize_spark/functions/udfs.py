@@ -15,7 +15,6 @@ import math
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
@@ -58,43 +57,3 @@ def grouped_demean(
         demean, schema=out_schema
     )
 
-
-def sentence_chunks_udtf():
-    """Python UDTF (Spark 3.5+): one input string -> N (chunk_idx,
-    sentence, n_tokens) rows. The table-function member of the UDF
-    surface — where a scalar UDF returns one value and applyInPandas
-    one group-frame, a UDTF emits a variable number of rows per input
-    row with its own output schema. Register with
-    ``spark.udtf.register`` or call inline via the returned handle.
-
-    Kept deliberately tiny: the engine's row-exploding text operators
-    (chunk_documents, explode(split(...))) stay Catalyst-side; this
-    exists to cover and test the UDTF API shape itself.
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_idx int, sentence string, n_tokens int")
-    class SentenceChunks:
-        def eval(self, text: str):  # noqa: D401 - UDTF contract
-            if text is None:
-                return
-            for i, raw in enumerate(text.replace("!", ".").replace("?", ".").split(".")):
-                s = raw.strip()
-                if s:
-                    yield i, s, len(s.split())
-
-    return SentenceChunks
-
-
-def observed_write(df: DataFrame, metrics: dict[str, "F.Column"]):
-    """Attach an Observation to ``df``: returns (observed_df,
-    observation). After ANY action on observed_df the accumulated
-    metrics are on ``observation.get`` — pipeline telemetry (row
-    counts, null rates, sums) for free during the write, instead of a
-    second scan to compute them. The 100 TB version of "count it
-    while you write it"."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    named = [c.alias(n) for n, c in metrics.items()]
-    return df.observe(obs, *named), obs

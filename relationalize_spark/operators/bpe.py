@@ -30,8 +30,8 @@ non-overlapping left-to-right ``replace`` therefore implements
 EXACTLY the BPE greedy-leftmost rewrite (``aaaaa`` with merge
 ``(a,a)`` -> ``aa aa a``; ``abab`` with ``(a,b)`` -> ``ab ab``), and
 ``replace`` has identical semantics in Spark and every SQL engine —
-verified against DuckDB on the run/alternation edge cases in
-``tests/test_bpe.py``. An unframed space-separated representation
+pinned by the property test in ``tests/test_bpe.py`` and by q133's
+DuckDB oracle. An unframed space-separated representation
 gets this wrong: the pattern consumes the boundary the next match
 needs, silently skipping alternate occurrences.
 
@@ -208,36 +208,3 @@ def bpe_eval(
         )
     )
 
-
-def bpe_apply(
-    df: DataFrame,
-    merge_rules: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    """Tokenize documents under learned merges: appends ``out_col``,
-    an array of subword tokens. Pure projection — the k replaces fuse
-    into the scan; no shuffle. Words are joined with a space between
-    framed groups, so merges can never cross a word boundary (the
-    pattern requires ``\\x1f\\x1e`` adjacency; across words it sees
-    ``\\x1f \\x1e``)."""
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
-    doc_sym = F.array_join(
-        F.transform(
-            words,
-            lambda w: _symbolize(F.translate(w, SYM_L + SYM_R, "")),
-        ),
-        " ",
-    )
-    for x, y in merge_rules:
-        doc_sym = F.replace(
-            doc_sym,
-            F.lit(SYM_L + x + SYM_R + SYM_L + y + SYM_R),
-            F.lit(SYM_L + x + y + SYM_R),
-        )
-    groups = F.filter(F.split(doc_sym, " "), lambda g: g != "")
-    toks = F.transform(
-        groups,
-        lambda g: F.split(g.substr(F.lit(2), F.length(g) - 2), PAIR_SEP),
-    )
-    return df.withColumn(out_col, F.flatten(toks))

@@ -237,32 +237,6 @@ def mix_sources(
     return out.drop("__replica__")
 
 
-def temperature_weights(
-    df: DataFrame,
-    alpha: float = 0.5,
-    source_col: str = "source",
-    target_rows: int | None = None,
-) -> dict[str, float]:
-    """Temperature-scaled source weights (the multilingual/multi-corpus
-    sampling scheme: sampling share ∝ p^alpha, alpha<1 flattens toward
-    uniform, alpha=1 is natural proportions). Returns per-source row
-    multipliers for :func:`mix_sources`: ``w_s = share_s * target /
-    n_s``, so the mixed corpus totals ~``target_rows`` (default: the
-    input size) with the temperature-tilted composition. The only
-    driver-side data is one row per source."""
-    counts = {
-        r["source"]: r["n"]
-        for r in df.groupBy(F.col(source_col).alias("source"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    total = sum(counts.values())
-    target = target_rows if target_rows is not None else total
-    shares = {s: (n / total) ** alpha for s, n in counts.items()}
-    z = sum(shares.values())
-    return {s: (shares[s] / z) * target / counts[s] for s in counts}
-
-
 #: Column-metadata key marking a pct_rank produced by
 #: group_relative_filter (the re-threshold path's ownership check).
 _PCT_RANK_TAG = "relationalize_spark.group_relative_filter"

@@ -146,44 +146,6 @@ def kmv_merge(
     )
 
 
-def kmv_set_stats(
-    a: DataFrame,
-    b: DataFrame,
-    on: list[str],
-    k: int = 64,
-    minima_col: str = "kmv_minima",
-    n_col: str = "kmv_n_distinct",
-) -> DataFrame:
-    """Set-overlap estimates between two KMV sketch frames joined on
-    ``on`` (the Beyer et al. 2007 KMV set-operation estimators):
-
-    - ``union_est``: KMV estimate over the k smallest of the union of
-      the two minima sets (valid because the k smallest of A∪B are a
-      subset of minima(A) ∪ minima(B) — sketch mergeability);
-    - ``jaccard_est``: fraction of those k that appear in BOTH input
-      sketches (the standard rho estimator);
-    - ``intersection_est``: ``jaccard_est * union_est``.
-
-    When both sides' sketches are exhaustive (fewer than k distinct
-    values each), all three are exact. Everything is bounded-k JVM
-    array arithmetic per joined row — no data re-scan; and the whole
-    computation replays in ANSI SQL over the same md5-derived hashes
-    (q127's value oracle).
-    """
-    ja = a.select(
-        *on,
-        F.col(minima_col).alias("__ma__"),
-        F.col(n_col).alias("__na__"),
-    )
-    jb = b.select(
-        *on,
-        F.col(minima_col).alias("__mb__"),
-        F.col(n_col).alias("__nb__"),
-    )
-    j = ja.join(jb, on)
-    return j.select(*on, *_set_stat_cols(k))
-
-
 def kmv_pairwise(
     sketches: DataFrame,
     group_col: str,
@@ -251,7 +213,10 @@ def kmv_pairwise(
 
 def _set_stat_cols(k: int) -> list[Column]:
     """The three overlap-estimate columns over a joined frame carrying
-    ``__ma__/__na__/__mb__/__nb__``."""
+    ``__ma__/__na__/__mb__/__nb__`` (Beyer et al. 2007): ``union_est``
+    over the k smallest of the merged minima, ``jaccard_est`` as the
+    share of those k in both sketches, ``intersection_est`` as their
+    product; all exact when both sketches are exhaustive."""
     merged = F.array_sort(F.array_union("__ma__", "__mb__"))
     x = F.slice(merged, 1, k)
     in_both = lambda v: F.array_contains("__ma__", v) & F.array_contains(

@@ -1,4 +1,4 @@
-from .diagnose import shuffle_census, skew_report
+from .diagnose import skew_report
 from .session import get_spark
 
-__all__ = ["get_spark", "shuffle_census", "skew_report"]
+__all__ = ["get_spark", "skew_report"]

@@ -1,10 +1,10 @@
-"""Pre-flight shuffle/skew diagnostics.
+"""Pre-flight skew diagnostics.
 
 At 100 TB the difference between a join that finishes and one that
-melts a reducer is usually ONE hot key. These helpers answer the two
-questions to ask before shipping a shuffle: *how skewed is the key*,
-and *what does the plan actually move*. Both are cheap relative to
-the jobs they de-risk (one partial-aggregated count; one plan walk).
+melts a reducer is usually ONE hot key. ``skew_report`` answers the
+question to ask before shipping a shuffle: *how skewed is the key*.
+It is cheap relative to the jobs it de-risks (one partial-aggregated
+count).
 
 The remediation toolkit lives next door in :mod:`plans.scale`
 (salting, replicated skew joins, bucketed co-location) —
@@ -88,19 +88,3 @@ def skew_report(
         p99_to_mean=p99_ratio,
         recommendation=rec,
     )
-
-
-def shuffle_census(df: DataFrame) -> dict[str, int]:
-    """Count the data-movement operators in ``df``'s physical plan —
-    the 30-second sanity check that a pipeline edit did not introduce
-    an extra exchange or lose a broadcast."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return {
-        "exchanges": plan.count("Exchange "),
-        "broadcast_joins": plan.count("BroadcastHashJoin"),
-        "sort_merge_joins": plan.count("SortMergeJoin"),
-        "shuffled_hash_joins": plan.count("ShuffledHashJoin"),
-        "nested_loop_joins": plan.count("BroadcastNestedLoopJoin")
-        + plan.count("CartesianProduct"),
-        "sorts": plan.count("Sort "),
-    }

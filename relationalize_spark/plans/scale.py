@@ -183,52 +183,3 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
-
-
-def compact_files(
-    spark: "SparkSession",
-    path: str,
-    out_path: str,
-    target_mb: int = 512,
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target_mb)`` files via ``coalesce`` (no
-    shuffle — partitions are concatenated, not redistributed). The
-    small-files problem is the classic operational failure of
-    incremental pipelines: a 100 TB table accreted in 10k micro-batches
-    becomes millions of KB-sized files, and every scan pays a
-    per-file open + footer read. Sizes come from the Hadoop
-    FileSystem API, so the same code runs on local paths, HDFS, and
-    s3a. Returns the number of output files written."""
-    import math
-
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    total = fs.getContentSummary(hpath).getLength()
-    n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    spark.read.parquet(path).coalesce(n).write.mode("overwrite").parquet(out_path)
-    return n
-
-
-def hinted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str] | str,
-    strategy: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join with an explicit physical strategy, for when the optimizer's
-    choice is wrong at scale: ``broadcast`` (small build side, no
-    shuffle), ``shuffle_hash`` (skip the sort when one side hashes in
-    memory — right for large-x-medium), ``merge`` (sort-merge, the
-    spill-safe default for large-x-large), ``shuffle_replicate_nl``
-    (cartesian, last resort). The hint binds to the RIGHT side, mirroring
-    build-side conventions. AQE can still re-plan a broadcast if runtime
-    sizes allow; the hint pins intent when statistics lie (e.g. a
-    filtered dimension whose estimate is 100x its true size).
-    """
-    strategies = {"broadcast", "merge", "shuffle_hash", "shuffle_replicate_nl"}
-    if strategy not in strategies:
-        raise ValueError(f"strategy must be one of {sorted(strategies)}")
-    return left.join(right.hint(strategy), on, how)

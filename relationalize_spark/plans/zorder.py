@@ -56,23 +56,3 @@ def add_zorder_key(
             ).cast("long")
         )
     return df.withColumn(key_col, _interleave(ranks, bits))
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    num_files: int = 16,
-    bits: int = 10,
-) -> None:
-    """Write parquet laid out along the z-curve: range-partition on the
-    Morton key so each output file owns a compact curve segment (a
-    tight bounding box in every z-ordered column)."""
-    keyed = add_zorder_key(df, cols, bits)
-    (
-        keyed.repartitionByRange(num_files, "zkey")
-        .sortWithinPartitions("zkey")
-        .drop("zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -30,6 +30,15 @@ Known deviations from the reference (documented, intentional):
   null-witness scan, or demote every nested object field to VARIANT
   (one aggregate pass per nesting level on every corpus) — the wrong
   trade for an observationally empty BOOLEAN DDL column.
+  ``JsonStreamDemux`` merges per batch, so there the column depends on
+  the batching: a batch in which an object-valued key (or every
+  element of an array of objects) is null in every row casts that key
+  as VARIANT, and the running schema gains the reference's ``none``
+  column (``o: none``, ``{path}__val_: none``), while the same lines
+  in one batch fold the null into the object branch. That batch
+  matches the reference's row walk and is kept as is;
+  tests/fixtures/parity_lock/demux_s13.json locks it (its
+  ``all_null_object`` batch).
 """
 
 from __future__ import annotations

@@ -3,7 +3,6 @@ from .upsert import overwrite_partitions, upsert_keys, write_partitioned
 from .writers import (
     write_csv_sorted,
     write_jsonl,
-    write_orc,
     write_parquet,
     write_tables,
 )
@@ -18,7 +17,6 @@ __all__ = [
     "write_partitioned",
     "write_csv_sorted",
     "write_jsonl",
-    "write_orc",
     "write_parquet",
     "write_tables",
 ]

@@ -57,21 +57,6 @@ def write_parquet(
     w.parquet(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Native ORC sink (dictionary + RLE encodings, vectorized read
-    back) — same contract as write_parquet for warehouses on the ORC
-    side of the fence."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
 def write_tables(
     tables: dict[str, DataFrame],
     base_path: str,

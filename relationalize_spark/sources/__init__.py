@@ -5,12 +5,7 @@ from .external import (
     rest_export_jsonl,
 )
 from .jsonl import read_jsonl_variant, relationalize_json
-from .readers import (
-    read_binary_files,
-    read_csv,
-    read_orc,
-    read_parquet,
-)
+from .readers import read_binary_files, read_parquet
 from .tables import load_table, load_tables, register_views
 
 __all__ = [
@@ -21,8 +16,6 @@ __all__ = [
     "read_jsonl_variant",
     "relationalize_json",
     "read_binary_files",
-    "read_csv",
-    "read_orc",
     "read_parquet",
     "load_table",
     "load_tables",

@@ -40,14 +40,12 @@ from ..plans.session import session_conf
 from ..schema import Schema
 
 
-def read_jsonl_variant(
-    spark: SparkSession, path: str, column: str = "v"
-) -> DataFrame:
-    """One VARIANT column per JSONL line; blank lines dropped."""
+def read_jsonl_variant(spark: SparkSession, path: str) -> DataFrame:
+    """One VARIANT column ``v`` per JSONL line; blank lines dropped."""
     return (
         spark.read.text(path)
         .filter(F.length(F.trim("value")) > 0)
-        .select(F.parse_json("value").alias(column))
+        .select(F.parse_json("value").alias("v"))
     )
 
 

@@ -15,26 +15,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    header: bool = True,
-    infer_schema: bool = True,
-    schema: str | None = None,
-    delimiter: str = ",",
-) -> DataFrame:
-    reader = (
-        spark.read.option("header", str(header).lower())
-        .option("delimiter", delimiter)
-        .option("mode", "PERMISSIVE")
-    )
-    if schema:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", str(infer_schema).lower())
-    return reader.csv(path)
-
-
 def read_jsonl_quarantine(
     spark: SparkSession, path: str, schema: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -72,23 +52,6 @@ def read_jsonl_quarantine(
     return good, bad
 
 
-def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read across schema drift: ``mergeSchema`` unions the
-    footers of every file, so days written before a column existed
-    read as NULL in that column instead of failing — the read-side
-    half of incremental ingestion (sinks/upsert.py is the write side).
-    Costs one footer pass over the file listing; at 100 TB pin the
-    merged schema explicitly once drift stabilizes."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """Native ORC scan (vectorized reader, predicate pushdown and
-    column pruning like parquet) — the interchange format a warehouse
-    migration is most likely to hand this engine besides parquet."""
-    return spark.read.orc(path)
-
-
 def read_binary_files(
     spark: SparkSession,
     path: str,
@@ -104,9 +67,9 @@ def read_binary_files(
     BEFORE content is materialized downstream — length is a listing
     column, so the filter prunes on metadata, not bytes read).
 
-    Scale note: one row per file means tiny-file corpora should be
-    compacted upstream (sinks/writers or the small-file compaction in
-    sources/jsonl); the source parallelizes by files, not by bytes.
+    Scale note: one row per file means a corpus of many tiny files
+    should be packed into fewer, larger files upstream; the source
+    parallelizes by files, not by bytes.
     """
     reader = spark.read.format("binaryFile")
     if glob:

@@ -4,13 +4,12 @@ from .relationalize_stream import (
     sessionize_stream,
     windowed_counts,
 )
-from .stateful import running_counter, streaming_exact_dedup
+from .stateful import streaming_exact_dedup
 
 __all__ = [
     "parquet_table_sink",
     "relationalize_stream",
     "sessionize_stream",
     "windowed_counts",
-    "running_counter",
     "streaming_exact_dedup",
 ]

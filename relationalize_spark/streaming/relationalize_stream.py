@@ -170,7 +170,12 @@ class JsonStreamDemux:
     - ``finalize(spark)`` reads each table's accumulated JSONL back
       and imposes the MERGED schema (convert_choice_columns), so the
       typed view is consistent no matter how branches were spread
-      over batches.
+      over batches — with one exception: a batch in which an
+      object-valued key is null in every row adds that key as a
+      ``none`` column, which a batching that mixes those rows with
+      object rows does not (see the "Phantom ``none`` columns" note
+      in schema.py; tests/fixtures/parity_lock/demux_s13.json locks
+      it).
 
     Delivery is exactly-once by construction: each batch directory is
     written with OVERWRITE, so a replayed batch (foreachBatch retries
@@ -475,18 +480,16 @@ class JsonStreamDemux:
         with session_conf(spark, "spark.sql.caseSensitive", "true"):
             return dict(zip(names, each_table(plan, names)))
 
-    def read_quarantine(
-        self, spark: SparkSession, *, dedup_replays: bool = True
-    ) -> DataFrame:
+    def read_quarantine(self, spark: SparkSession) -> DataFrame:
         """The quarantined raw lines as a one-column (``value``)
         DataFrame. Delivery into ``_quarantine`` is AT-LEAST-ONCE
-        (the append in process_batch replays on retry), so the default
-        drops byte-identical lines on read-back, keyed on a 192-bit
-        digest pair (xxhash64 + md5): shuffle comparisons touch 24-byte
-        keys instead of whole documents, and collision across BOTH
-        digests is ~2^-96 — negligible against corpus sizes. Pass
-        ``dedup_replays=False`` to audit raw delivery (e.g. to count
-        replay amplification)."""
+        (the append in process_batch replays on retry), so this drops
+        byte-identical lines on read-back, keyed on a 192-bit digest
+        pair (xxhash64 + md5): shuffle comparisons touch 24-byte keys
+        instead of whole documents, and collision across BOTH digests
+        is ~2^-96 — negligible against corpus sizes. To audit raw
+        delivery (e.g. to count replay amplification), read the text
+        files under ``{base_path}/_quarantine`` directly."""
         qpath = f"{self.base_path}/_quarantine"
         fs, p = _fs_for(spark, qpath)
         if not fs.exists(p):
@@ -494,15 +497,14 @@ class JsonStreamDemux:
             # has misparsed): the natural answer is 0 rows, not a
             # PATH_NOT_FOUND crash at the monitoring caller.
             return spark.createDataFrame([], "value string")
-        q = spark.read.option("recursiveFileLookup", "true").text(qpath)
-        if dedup_replays:
-            q = (
-                q.withColumn("__d1__", F.xxhash64("value"))
-                .withColumn("__d2__", F.md5("value"))
-                .dropDuplicates(["__d1__", "__d2__"])
-                .drop("__d1__", "__d2__")
-            )
-        return q
+        return (
+            spark.read.option("recursiveFileLookup", "true")
+            .text(qpath)
+            .withColumn("__d1__", F.xxhash64("value"))
+            .withColumn("__d2__", F.md5("value"))
+            .dropDuplicates(["__d1__", "__d2__"])
+            .drop("__d1__", "__d2__")
+        )
 
 
 def parquet_table_sink(base_path: str) -> TableSink:

@@ -54,62 +54,3 @@ def streaming_exact_dedup(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def running_counter(
-    stream_df: DataFrame,
-    key_col: str,
-) -> DataFrame:
-    """Cumulative per-key event counter emitted each micro-batch —
-    the minimal custom-state transition (read, add, write)."""
-
-    def count(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (total,) = state.get if state.exists else (0,)
-        new = sum(len(pdf) for pdf in batches)
-        total += new
-        state.update((total,))
-        yield pd.DataFrame({"key": [key[0]], "total": [total]})
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        count,
-        outputStructType="key string, total long",
-        stateStructType="total long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def running_counter_tws(stream_df: DataFrame, key_col: str) -> DataFrame:
-    """The same cumulative counter on Spark 4's transformWithState API
-    (StatefulProcessor + typed state handles, RocksDB-backed): the
-    successor to applyInPandasWithState, adding composite state types,
-    TTL, and timers. Requires
-    ``spark.sql.streaming.stateStore.providerClass`` =
-    ``RocksDBStateStoreProvider`` on the session. Kept alongside the
-    GroupState version above so both stateful APIs stay covered."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class Counter(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._total = handle.getValueState("total", "total long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            new = sum(len(pdf) for pdf in rows)
-            prev = self._total.get()[0] if self._total.exists() else 0
-            total = prev + new
-            self._total.update((total,))
-            yield pd.DataFrame({"key": [key[0]], "total": [total]})
-
-        def close(self) -> None:
-            pass
-
-    return stream_df.groupBy(key_col).transformWithStateInPandas(
-        Counter(),
-        outputStructType="key string, total long",
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -1,5 +1,5 @@
 """BPE tokenizer training: hand-computed merge sequences, greedy
-rewrite semantics, apply round-trip (operators/bpe.py)."""
+rewrite semantics, fertility eval (operators/bpe.py)."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -7,7 +7,6 @@ import pytest
 from relationalize_spark.operators.bpe import (
     SYM_L,
     SYM_R,
-    bpe_apply,
     bpe_train,
     word_vocab,
 )
@@ -45,47 +44,6 @@ def test_word_vocab_counts_and_hygiene(spark):
     got = {r.word: r.freq for r in word_vocab(df).collect()}
     # framing chars stripped -> all four occurrences collapse to 'ab'
     assert got == {"ab": 4}
-
-
-def test_greedy_leftmost_runs_and_alternation(spark):
-    # The replace-semantics contract the module docstring proves:
-    # framed rewrites ARE greedy-leftmost.
-    df = spark.createDataFrame(
-        [(1, "aaaaa"), (2, "abab"), (3, "aaa")], "doc_id int, text string"
-    )
-    out = {
-        r.doc_id: r.bpe_tokens
-        for r in bpe_apply(df, [("a", "a")]).collect()
-    }
-    assert out[1] == ["aa", "aa", "a"]
-    assert out[3] == ["aa", "a"]
-    out2 = {
-        r.doc_id: r.bpe_tokens
-        for r in bpe_apply(df, [("a", "b")]).collect()
-    }
-    assert out2[2] == ["ab", "ab"]
-
-
-def test_apply_learned_merges(spark, corpus):
-    rules = [(l, r) for _, l, r, _, _ in bpe_train(corpus, merges=3)]
-    df = spark.createDataFrame([(1, "low lower newest")], "doc_id int, text string")
-    got = bpe_apply(df, rules).collect()[0].bpe_tokens
-    assert got == ["low", "low", "e", "r", "n", "e", "w", "es", "t"]
-
-
-def test_apply_never_merges_across_words(spark):
-    # 'b a' at a word boundary must not merge under rule (b, a).
-    df = spark.createDataFrame([(1, "ab ab")], "doc_id int, text string")
-    got = bpe_apply(df, [("b", "a")]).collect()[0].bpe_tokens
-    assert got == ["a", "b", "a", "b"]
-
-
-def test_apply_empty_and_whitespace_docs(spark):
-    df = spark.createDataFrame(
-        [(1, ""), (2, "   "), (3, "x")], "doc_id int, text string"
-    )
-    got = {r.doc_id: r.bpe_tokens for r in bpe_apply(df, [("a", "b")]).collect()}
-    assert got[1] == [] and got[2] == [] and got[3] == ["x"]
 
 
 def test_train_deterministic_under_repartition(spark, corpus):

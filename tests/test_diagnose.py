@@ -1,8 +1,8 @@
-"""Skew reporting and shuffle census over controlled distributions."""
+"""Skew reporting over controlled distributions."""
 
 from pyspark.sql import functions as F
 
-from relationalize_spark.plans.diagnose import shuffle_census, skew_report
+from relationalize_spark.plans.diagnose import skew_report
 
 
 def test_skew_report_flags_hot_key(spark):
@@ -32,15 +32,3 @@ def test_skew_report_composite_key(spark):
     rep = skew_report(df, ["a", "b"], top_n=3)
     assert rep.distinct_keys == 70
     assert len(rep.top_keys[0]) == 3  # a, b, count
-
-
-def test_shuffle_census_counts_strategies(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    joined = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).groupBy(
-        "c_mktsegment"
-    ).count()
-    census = shuffle_census(joined)
-    assert census["broadcast_joins"] == 1
-    assert census["nested_loop_joins"] == 0
-    assert census["exchanges"] >= 1

@@ -1,35 +1,11 @@
-"""ORC round-trip (the non-parquet columnar interchange) and the
-binaryFile media-ingestion scan feeding the multimodal operators."""
+"""The binaryFile media-ingestion scan feeding the multimodal
+operators."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from relationalize_spark.operators.multimodal import decode_images
-from relationalize_spark.sinks.writers import write_orc
-from relationalize_spark.sources.readers import read_binary_files, read_orc
-
-
-def test_orc_round_trip_and_pushdown(spark, sf_dir, tmp_path):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    path = str(tmp_path / "orders_orc")
-    write_orc(orders, path, partition_by=["o_orderstatus"])
-
-    back = read_orc(spark, path)
-    assert back.count() == orders.count()
-    a = orders.groupBy("o_orderstatus").count()
-    b = back.groupBy("o_orderstatus").count()
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-    # Partition pruning: a partition-key predicate must reach the scan
-    # as partition filters, not a post-scan filter over all files.
-    plan = (
-        back.filter(F.col("o_orderstatus") == "F")
-        .select("o_orderkey")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan and "o_orderstatus" in plan.split("PartitionFilters")[1][:200]
+from relationalize_spark.sources.readers import read_binary_files
 
 
 def test_binary_files_scan_feeds_decode(spark, tmp_path):

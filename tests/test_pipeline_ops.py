@@ -706,42 +706,6 @@ def test_fk_violations_counts_orphans_and_nulls(spark):
     assert sorted(r["payload"] for r in bad) == ["nullkey", "orphan"]
 
 
-def test_temperature_weights_flatten_toward_uniform(spark):
-    from relationalize_spark.operators.sampling import (
-        mix_sources,
-        temperature_weights,
-    )
-
-    rows = (
-        [(i, "big") for i in range(800)]
-        + [(800 + i, "mid") for i in range(150)]
-        + [(950 + i, "small") for i in range(50)]
-    )
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-
-    # alpha=1: natural proportions, every weight 1.0
-    w1 = temperature_weights(df, alpha=1.0)
-    assert all(abs(w - 1.0) < 1e-9 for w in w1.values())
-
-    # alpha=0: uniform shares -> each source targets total/3 rows
-    w0 = temperature_weights(df, alpha=0.0)
-    assert abs(w0["small"] * 50 - 1000 / 3) < 1.0
-    assert abs(w0["big"] * 800 - 1000 / 3) < 1.0
-    # the rare source is UPsampled, the dominant one DOWNsampled
-    assert w0["small"] > 1.0 > w0["big"]
-
-    # intermediate alpha composes with mix_sources to roughly hit the
-    # target composition (hash granularity is 1%)
-    w = temperature_weights(df, alpha=0.5, target_rows=600)
-    mixed = mix_sources(df, w, default=0.0)
-    got = {
-        r["source"]: r["n"]
-        for r in mixed.groupBy("source").agg(F.count("*").alias("n")).collect()
-    }
-    assert 450 <= sum(got.values()) <= 750
-    assert got["small"] / 50 > got["big"] / 800  # tilt toward the tail
-
-
 def test_pq_recall_and_contracts_on_clustered_data(spark):
     """r8: product quantization in its design regime (clustered
     corpus) — ADC top-5 recall vs brute force must be high, codes must

@@ -200,26 +200,6 @@ def test_runtime_bloom_filter_join_pruning(spark):
             spark.conf.set(k, v)
 
 
-def test_hinted_join_pins_physical_strategy(spark):
-    """Each hint yields its physical join operator regardless of what
-    the optimizer would pick on its own."""
-    from relationalize_spark.plans.scale import hinted_join
-
-    a = spark.range(10_000).select(F.col("id").alias("k"), F.col("id").alias("x"))
-    b = spark.range(100).select(F.col("id").alias("k"), F.col("id").alias("y"))
-
-    def phys(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    assert "BroadcastHashJoin" in phys(hinted_join(a, b, "k", "broadcast"))
-    assert "SortMergeJoin" in phys(hinted_join(a, b, "k", "merge"))
-    assert "ShuffledHashJoin" in phys(hinted_join(a, b, "k", "shuffle_hash"))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="strategy"):
-        hinted_join(a, b, "k", "nested_loop")
-
-
 def test_aqe_splits_skewed_join_partitions(spark):
     """With one key owning ~90% of rows, AQE's skew-join rewrites the
     sort-merge join to split the oversized partition (visible as

@@ -243,13 +243,3 @@ def test_audio_features_decodes_real_wav(spark):
     # non-WAV payloads yield NULL features, not a failed job
     assert rows[3].sample_rate is None and rows[3].n_bytes == 16
     assert rows[4].n_bytes is None
-
-
-def test_csv_reader_roundtrip(spark, small, tmp_path):
-    from relationalize_spark.sources.readers import read_csv
-
-    p = str(tmp_path / "csvsrc")
-    write_csv_sorted(small.repartition(1), p)
-    back = read_csv(spark, p, schema="alpha string, m double, zid long")
-    assert back.count() == 2
-    assert {r.alpha for r in back.collect()} == {"a", "b"}

@@ -195,67 +195,56 @@ def test_kmv_salted_topk_equals_global(spark):
     assert a == b
 
 
-def test_kmv_set_stats_exact_below_k(spark):
+def _pair_stats(spark, a_vals, b_vals, k):
+    """kmv_pairwise's one (a, b) row for two groups holding a_vals and
+    b_vals."""
+    from relationalize_spark.operators.sketches import kmv_pairwise, kmv_sketch
+
+    df = spark.createDataFrame(
+        [("a", v) for v in a_vals] + [("b", v) for v in b_vals],
+        "g string, v string",
+    )
+    return kmv_pairwise(kmv_sketch(df, ["g"], "v", k=k), "g", k=k).first()
+
+
+def test_kmv_pairwise_exact_below_k(spark):
     """Both sketches exhaustive -> jaccard/union/intersection are
     exactly the true set values."""
-    from relationalize_spark.operators.sketches import kmv_set_stats, kmv_sketch
-
-    a = spark.createDataFrame(
-        [("g", f"v{i}") for i in range(20)], "g string, v string"
+    row = _pair_stats(
+        spark, [f"v{i}" for i in range(20)], [f"v{i}" for i in range(10, 40)], 64
     )
-    b = spark.createDataFrame(
-        [("g", f"v{i}") for i in range(10, 40)], "g string, v string"
-    )
-    row = kmv_set_stats(
-        kmv_sketch(a, ["g"], "v", k=64), kmv_sketch(b, ["g"], "v", k=64), ["g"], k=64
-    ).first()
     # |A|=20, |B|=30, inter=10, union=40
     assert row.union_est == 40.0
     assert row.intersection_est == 10.0
     assert abs(row.jaccard_est - 10 / 40) < 1e-9
 
 
-def test_kmv_set_stats_exact_when_union_exceeds_k(spark):
+def test_kmv_pairwise_exact_when_union_exceeds_k(spark):
     """ADVICE r5 (medium): both sketches exhaustive (na,nb < k) but
     |A∪B| > k — the exact branch must count the intersection over the
     FULL merged union, not its first-k slice, or members ranked past k
     are missed and jaccard/intersection understate the true values."""
-    from relationalize_spark.operators.sketches import kmv_set_stats, kmv_sketch
-
-    k = 64
     # |A|=60, |B|=60, overlap 40 -> union 80 > k while both sides < k;
     # ~16 of the 40 shared hashes rank past k in the merged order, so
     # the pre-fix slice formula loses them almost surely.
-    a = spark.createDataFrame(
-        [("g", f"v{i}") for i in range(60)], "g string, v string"
+    row = _pair_stats(
+        spark, [f"v{i}" for i in range(60)], [f"v{i}" for i in range(20, 80)], 64
     )
-    b = spark.createDataFrame(
-        [("g", f"v{i}") for i in range(20, 80)], "g string, v string"
-    )
-    row = kmv_set_stats(
-        kmv_sketch(a, ["g"], "v", k=k), kmv_sketch(b, ["g"], "v", k=k), ["g"], k=k
-    ).first()
     assert row.union_est == 80.0
     assert abs(row.jaccard_est - 40 / 80) < 1e-6
     assert abs(row.intersection_est - 40.0) < 1e-3
 
 
-def test_kmv_set_stats_estimates_above_k(spark):
+def test_kmv_pairwise_estimates_above_k(spark):
     """Known 50% overlap at 4000-distinct scale: estimates land within
     the sketch's error envelope (k=128 -> ~9% relative, 3x slack)."""
-    from relationalize_spark.operators.sketches import kmv_set_stats, kmv_sketch
-
     n = 4000
-    a = spark.createDataFrame(
-        [("g", f"v{i}") for i in range(n)], "g string, v string"
+    row = _pair_stats(
+        spark,
+        [f"v{i}" for i in range(n)],
+        [f"v{i}" for i in range(n // 2, n + n // 2)],
+        128,
     )
-    b = spark.createDataFrame(
-        [("g", f"v{i}") for i in range(n // 2, n + n // 2)], "g string, v string"
-    )
-    row = kmv_set_stats(
-        kmv_sketch(a, ["g"], "v", k=128), kmv_sketch(b, ["g"], "v", k=128),
-        ["g"], k=128,
-    ).first()
     true_union, true_jac = n + n // 2, (n // 2) / (n + n // 2)
     assert abs(row.union_est - true_union) / true_union < 0.27
     assert abs(row.jaccard_est - true_jac) / true_jac < 0.35

@@ -1,11 +1,6 @@
-"""Z-order layout: the Morton key interleaves correctly, and z-ordered
-files carry tight per-file min/max bounds on BOTH columns (the property
-parquet skipping exploits), where a single-column sort leaves the other
-column's bounds spanning the whole domain."""
+"""Z-order layout: the Morton key interleaves correctly."""
 
-import pyspark.sql.functions as F
-
-from relationalize_spark.plans.zorder import add_zorder_key, write_zordered
+from relationalize_spark.plans.zorder import add_zorder_key
 
 
 def _morton_ref(x: int, y: int, bits: int) -> int:
@@ -30,35 +25,3 @@ def test_zorder_key_matches_reference_interleave(spark):
         # ranks: min/max normalize maps [0, top] onto itself here
         assert z == _morton_ref(x, y, bits), (x, y, z)
     assert len(set(got.values())) == n * 1  # keys distinct on this grid
-
-
-def test_zordered_files_have_tight_bounds_on_both_columns(spark, tmp_path):
-    rows = [(i // 100, i % 100) for i in range(10_000)]  # full 100x100 grid
-    df = spark.createDataFrame(rows, "x int, y int")
-
-    zpath, xpath = str(tmp_path / "z"), str(tmp_path / "x")
-    write_zordered(df, zpath, ["x", "y"], num_files=16)
-    (
-        df.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(xpath)
-    )
-
-    def mean_span(path, col):
-        per_file = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name())
-            .agg((F.max(col) - F.min(col)).alias("span"))
-            .agg(F.avg("span"))
-            .collect()[0][0]
-        )
-        return per_file
-
-    # x-sorted layout: x is tight, y spans ~the whole [0,100) domain
-    assert mean_span(xpath, "x") < 15
-    assert mean_span(xpath, "y") > 90
-    # z-ordered layout: BOTH columns' per-file spans are a fraction of
-    # the domain -> min/max skipping works for filters on either
-    assert mean_span(zpath, "x") < 60
-    assert mean_span(zpath, "y") < 60
